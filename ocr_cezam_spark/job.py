@@ -1,8 +1,8 @@
 """Batch extraction job: the spark-submit entry point.
 
 Lifecycle (SURVEY.md section 3, Spark equivalent): scan -> native
-pre-filters -> explicit repartition by url-hash (optionally salted for hot
-hosts) -> mapInArrow kernel -> long-format output tables + per-partition
+pre-filters -> explicit repartition by url-hash (salted for hot hosts)
+-> mapInArrow kernel -> long-format output tables + per-partition
 metrics -> append with resume anti-join.
 
 Cluster launch::
@@ -37,7 +37,6 @@ def run_job(
     docs: DataFrame,
     output_prefix: str,
     num_partitions: int | None = None,
-    salt_hot_hosts: bool = True,
     resume: bool = True,
     redact_pii: bool = False,
 ) -> dict[str, int]:
@@ -71,16 +70,10 @@ def run_job(
     # run the committed 99% must not mask a host that dominates the
     # remaining 1% — the exact straggler salting exists to prevent. One
     # action; the anti-join it re-executes is url-column-pruned.
-    hot_hosts: list[str] = []
-    if salt_hot_hosts:
-        threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
-        hot_hosts = detect_hot_hosts(docs.select("url"), threshold)
-
-    if salt_hot_hosts:
-        docs = salted_repartition(docs, num_partitions, hot_hosts=hot_hosts)
-        out = X.run_extract(docs, num_partitions=None)
-    else:
-        out = X.run_extract(docs, num_partitions=num_partitions)
+    threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
+    hot_hosts = detect_hot_hosts(docs.select("url"), threshold)
+    docs = salted_repartition(docs, num_partitions, hot_hosts=hot_hosts)
+    out = X.run_extract(docs)
 
     # A6 analog (SURVEY 2.4): free job-level counters via observe() —
     # collected from the same action that materializes the output, no

@@ -663,7 +663,10 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id",
     majority test count*2 > n_words compares exact integers either way.
     explode_outer keeps null-text docs as a single null-word row, whose
     votes are all zero — the same all-zero chunks the in-row form
-    emitted for null text."""
+    emitted for null text.
+
+    Precondition: ids must be unique in ``docs``. The votes aggregate on
+    the id, so rows sharing an id pool their words into one fingerprint."""
     words = _words(text_col)
     exploded = docs.select(F.col(id_col), F.explode_outer(words).alias("_w"))
     d = F.md5("_w")
@@ -808,8 +811,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     than silently returning unconverged labels (a pair graph with diameter
     > max_iter would otherwise get wrong components with no error).
     Iterations needed = graph diameter (near-dup clusters are tiny, so 2-3
-    in practice). localCheckpoint truncates the growing plan each round
-    (the classic iterative-algorithm lineage blowup).
+    in practice); every graph of diameter <= max_iter - 1 converges, the
+    same budget as one-step rounds with a final no-change check.
+    localCheckpoint truncates the growing plan each round (the classic
+    iterative-algorithm lineage blowup).
     """
     from pyspark.sql import functions as F  # noqa: N812
 
@@ -855,8 +860,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     # the joins — dominated the fixpoint. Labels only ever decrease, so
     # comparing a round's END against its START ("orig") detects a change
     # in either half-step, and running one half-step past convergence is
-    # a no-op on the result. Same fixpoint, half the driver rounds.
-    for _ in range((max_iter + 1) // 2):
+    # a no-op on the result. Same fixpoint, half the driver rounds:
+    # diameter d takes ceil(d / 2) changing rounds plus one quiet round,
+    # so max_iter // 2 + 1 rounds cover every d <= max_iter - 1.
+    for _ in range(max_iter // 2 + 1):
         start = labels.withColumn("orig", F.col("component"))
         stepped = step(step(start))
         new_labels = stepped.select(
@@ -1559,6 +1566,10 @@ def incremental_near_dup(new_docs: DataFrame, corpus: DataFrame,
     fraction; emitted value rounded 4 dp), ordered by (new_id,
     corpus_id). Same MINHASH_COEFFS as the batch pair generator — the
     two operators' estimates are directly comparable.
+
+    Precondition: ids must be unique within ``new_docs`` and within
+    ``corpus``. Signatures are re-attached to candidates by id, so a
+    duplicated id multiplies that candidate's rows.
     """
     # Signatures are computed once each side and lazily checkpointed:
     # the band join consumes the band keys, the verify step re-attaches

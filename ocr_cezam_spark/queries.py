@@ -55,18 +55,19 @@ def _register(name: str, fn: QueryFn, oracle: str | None) -> None:
 
 
 # Tables whose consumers are CPU-BOUND per row (shingle md5 passes,
-# simhash votes, quality stats, interpreted vector math): these get the
-# _spread parallelism floor. The relational tables (lineitem, orders,
-# events, ...) stay unspread — their queries are scan+aggregate shapes
-# where partial aggregation already collapses the single-split input and
-# a corpus-wide repartition costs more than it buys (measured 0.4s ->
-# 1.0s on pricing_summary).
-_SPREAD_TABLES = {"documents", "embeddings"}
+# simhash votes, quality stats, interpreted vector math), mapped to the
+# unique id column the _spread parallelism floor hashes on. The relational
+# tables (lineitem, orders, events, ...) stay unspread — their queries are
+# scan+aggregate shapes where partial aggregation already collapses the
+# single-split input and a corpus-wide repartition costs more than it buys
+# (measured 0.4s -> 1.0s on pricing_summary).
+_SPREAD_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return _spread(df) if name in _SPREAD_TABLES else df
+    key = _SPREAD_TABLES.get(name)
+    return df if key is None else _spread(df, key)
 
 
 def _t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -78,7 +79,7 @@ def _t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, key: str) -> DataFrame:
     """Scale-adaptive input-parallelism floor (optimization guide section
     2.5, input skew: "one huge unsplittable file ... repartition
     immediately after the read"). The sf test tables are single-file,
@@ -94,13 +95,15 @@ def _spread(df: DataFrame) -> DataFrame:
     explicitly."""
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
-        # hash-repartition on every column rather than round-robin:
+        # hash-repartition on the unique id rather than round-robin:
         # keyless repartition(n) first pays a LOCAL SORT of its input
         # (sortBeforeRepartition, for retry determinism) which would run
         # single-threaded inside the one under-partitioned scan task —
         # measured 3-4x slower than the hash spread on the 600k-row
-        # table. Hashing the full row is deterministic across retries.
-        return df.repartition(n, *[F.col(c) for c in df.columns])
+        # table. A unique key cannot skew, and because the partitioning
+        # expression references only that column, a consumer's select
+        # still prunes the scan to the columns it reads.
+        return df.repartition(n, F.col(key))
     return df
 
 
@@ -7189,11 +7192,6 @@ _register(
 # every doc has an exact clone -> dup_frac 0.5 exactly); lang/source
 # concentration from the real columns. The quality mean is recovered
 # from exact integer sums in both engines (see corpus_report docstring).
-# WINDOW NOTE: this entry sits at position 51 — the r7 driver window is
-# SATURATED with behavior-changed queries (all 50 slots), so for r7
-# this query is enforced by the sf0.001 oracle gate on every pytest run
-# plus sf0.01 tools/check_oracles.py (hash-green at registration), and
-# rotates INTO the r8 window first.
 def _card_corpus(s: SparkSession, d: str) -> DataFrame:
     docs = _t(s, d, "documents").select("doc_id", "text", "lang", "source")
     return docs.unionByName(
@@ -8085,312 +8083,3 @@ _register(
     GROUP BY c.id
     """,
 )
-
-
-# ---------------------------------------------------------------------------
-# Driver CORRECTNESS window ordering. The driver's artifact records the
-# FIRST 50 registry entries, so entries that most need a driver-green row
-# this round (never recorded in r01-r03, new this round, or behavior
-# changed this round) must precede the rotated-out stalwarts below. The
-# rotated-out queries were all driver-green in CORRECTNESS_r03 and stay
-# continuously verified by tools/check_oracles.py (same hash discipline).
-# ---------------------------------------------------------------------------
-_WINDOW_TAIL = [
-    # r5 rotation rule, same as always: anything BEHAVIOR-CHANGED this
-    # round sits in the window; only r4-driver-green queries untouched in
-    # r5 rotate out. The engine-identical rounding conversion (round_he /
-    # floor-form SQL) touched 18 former tail queries — they rotated back
-    # IN; the 18 below rotated out in their place (r4-green, zero r5
-    # diff: no rounding, date/solde/dedup-cluster code untouched). All
-    # tail queries stay enforced by tests/test_oracle_gate.py at sf0.001
-    # on every pytest run plus tools/check_oracles.py at sf0.01.
-    "region_rollup",  # already floor-form since r4 (cad53d2) — unchanged
-    # event_transitions and simhash_dedup_first carry NO rounded column —
-    # review pass corrected the first rotation draft, which had swapped
-    # them with the genuinely-converted union_by_arity/code_semijoin_lead
-    "event_transitions", "simhash_dedup_first", "line_grouping",
-    "cube_counts", "distinct_users", "mrz_fixed_slice", "langid",
-    "fingerprint", "hash_embedding", "subtoken_count", "byte_histogram",
-    "multimodal_meta", "image_header_meta", "frame_sample",
-    "dedup_exact", "minhash_lsh_pairs", "simhash_buckets",
-    "url_canonicalize", "nfc_normalize", "pii_redact",
-    # rotated out in the r5 rounding swap (r4-driver-green, untouched):
-    "doc_kind", "key_value_fields", "id_number_12", "tax_notice_date",
-    "assemble_tables", "cells_schema_groups", "zone_projection",
-    "bank_id_broadcast_join", "incremental_dedup", "decontaminate",
-    "url_blocklist_filter", "inverted_index", "train_val_test_split",
-    "temperature_sample", "sequence_pack", "dedup_clusters",
-    "french_date_roundtrip", "date_field_native",
-    # rotated out when cluster_best_docs / crawl_churn / target_mix_sample
-    # entered (r4-driver-green; their driver-query paths untouched in r5 —
-    # fix_mojibake's driver query runs the unchanged default chain):
-    "fix_mojibake", "solde_native", "pivot_wide_statements",
-    # rotated out when extract_links entered (r4-driver-green, no rounding,
-    # skew.py untouched in r5):
-    "domain_quota_sample",
-    # rotated out when crawl_delays / sitemap_urls entered (r4-driver-
-    # green; their operator functions untouched this round):
-    "near_dup_dedup_first", "simhash_hamming_pairs",
-    # rotated out when robots_filter entered (rounding-converted, but its
-    # min/max/median price values sit far from representable-midpoint
-    # hazards and the sf0.001 tail gate re-checks it every pytest run):
-    "percentile_stats",
-    # r6 rotation: rotated out as robots_filter_agent, frontier_next and
-    # gopher_line_quality entered the window (all r5-driver-green, their
-    # chains untouched this round — repetition_stats' operator function
-    # is untouched by the gopher_line_quality addition to textstats.py):
-    "unigram_logprob", "source_skew_stats", "repetition_stats",
-    # r6 rotation, second batch: rotated out as the sketch/semantic-dedup
-    # /quality-composition/schedule queries entered (hll_cardinality,
-    # cm_heavy_hitters, semantic_dedup, perplexity_buckets,
-    # quality_ensemble, intra_doc_line_dedup, fetch_schedule,
-    # link_target_stats). All eight below are r5-driver-green pure
-    # relational queries; the r6 relational.py diff is one pure function
-    # ADDITION (asof_join) — the eight bodies have zero diff. The
-    # kernel-backed queries stay IN the window because the zero-copy
-    # Arrow-buffer change touched their path:
-    "pricing_summary", "top_revenue_customers", "running_balance",
-    "sessionize", "statement_reconciliation", "code_semijoin_lead",
-    "value_bucket_join", "union_by_arity",
-    # rotated out when anchor_text_topk entered (r5-driver-green;
-    # functions/text.py has zero diff this round):
-    "digit_decimal_parse",
-    # rotated out as page_metadata / canonical_dedup entered (both
-    # r5-driver-green; the r6 textstats.py diff is pure function
-    # ADDITIONS — token_quality's and gopher_quality's bodies have zero
-    # diff, verified via git diff ea299eb..HEAD hunks):
-    "token_quality", "gopher_quality",
-    # rotated out as registered_domain_stats entered (r5-driver-green;
-    # operators/dedup.py has zero diff this round, and cluster_best_docs
-    # reads the documents table, not the kernel corpus, so the zero-copy
-    # Arrow change cannot touch its path):
-    "cluster_best_docs",
-    # rotated out as dup_ngram_fraction entered (r5-driver-green;
-    # ngram_jaccard's operator in dedup.py has zero diff this round and
-    # it reads the documents table, untouched by the kernel change):
-    "ngram_jaccard",
-    # rotated out as asof_click_attribution entered (r5-driver-green;
-    # lsh_jaccard_verify's dedup.py chain has zero diff this round):
-    "lsh_jaccard_verify",
-    # rotated out as fetch_join entered (r5-driver-green; window_dedup's
-    # operator window_dedup_stats in dedup.py has zero diff this round
-    # and reads the documents table, untouched by the kernel change):
-    "window_dedup",
-    # rotated out as dsir_select / weighted_sample entered (both
-    # r5-driver-green; simsearch.py's r6 diff is the semantic_dedup
-    # ADDITION — cosine_topk's and embedding_near_dup's bodies have zero
-    # diff, and both read the embeddings table, untouched this round):
-    "cosine_topk", "embedding_near_dup",
-    # rotated out as substring_span_dedup entered (r5-driver-green;
-    # minhash_lsh_pairs' chain in dedup.py has zero diff this round —
-    # the r6 dedup.py diff is the substring_span_dedup ADDITION):
-    "minhash_lsh_pairs",
-    # rotated out as winnowing_fingerprints entered (r5-driver-green;
-    # simhash_buckets' chain in dedup.py has zero diff this round):
-    "simhash_buckets",
-    # rotated out as winnowing_pairs entered (r5-driver-green;
-    # simhash_hamming_pairs already sits in the tail and
-    # pq_ann_topk's pq.py has zero diff this round):
-    "pq_ann_topk",
-    # rotated out as the continuation batch (asof/fetch_join/dsir/
-    # weighted/substring/winnowing x2) outgrew the one-out-per-one-in
-    # ledger above: both are r5-driver-green, their simsearch.py bodies
-    # have zero diff this round (the r6 simsearch diff is the
-    # semantic_dedup ADDITION) and both read the untouched embeddings
-    # table:
-    "ann_ivf_topk", "ivf_bucket_stats",
-    # rotated out as hll_merge entered (r5-driver-green; same zero-diff
-    # simsearch.py argument as ann_ivf_topk above):
-    "ann_ivf_topk_k64",
-    # rotated out as cm_merge entered (r5-driver-green; its
-    # simsearch/pq chain has zero diff this round):
-    "ann_ivf_trained_topk",
-    # r7 rotation: rotated out as hll_cardinality64, hll_merge64,
-    # cm_heavy_hitters_w256, build_training_corpus and
-    # semantic_dedup_trained entered. All five below are r6-driver-green
-    # and their chains have ZERO behavior diff this round: the winnowing
-    # pair live in textstats.py/dedup.py (r7 diff to those files: none),
-    # asof_click_attribution in relational.py (untouched), fetch_join's
-    # batch twin in relational.py + queries fixture (untouched), and
-    # crawl_churn in dedup.py (untouched). The r7-changed queries all
-    # stay IN the window: dsir_select (quantized cutoff), extract_links/
-    # extract_fields/page_metadata/canonical_dedup (kernel resolver +
-    # head-boundary fixes), cm_heavy_hitters (oracle re-emitted from
-    # cm_hh_sql), registered_domain_stats (full PSL + SQL-function
-    # path), semantic_dedup (signature extended, default path identical)
-    # and clean_corpus (keep_text option, default output identical):
-    "winnowing_fingerprints", "winnowing_pairs", "asof_click_attribution",
-    "fetch_join", "crawl_churn",
-    # rotated out as hdr_quantiles / hdr_merge entered (both r6-driver-
-    # green; dup_ngram_fraction's chain lives in textstats.py/dedup.py —
-    # zero r7 diff — and robots_filter_agent's in robots.py, untouched
-    # this round; robots_filter stays IN the window covering that
-    # family):
-    "dup_ngram_fraction", "robots_filter_agent",
-    # rotated out as the r7 continuation batch entered (host_hits,
-    # kmv_distinct, kmv_merge, kmv_crawl_overlap, containment_pairs,
-    # chunk_passages, chunk_dedup_stats). All seven below are r6-driver-
-    # green and this batch touches their modules only as pure function
-    # ADDITIONS (graph.hits, sketch.kmv_*, dedup.containment_pairs,
-    # textstats.chunk_*): crawl_delays/sitemap_urls live in robots.py
-    # (zero diff; robots_filter stays IN covering the family),
-    # latest_crawl_dedup/paragraph_dedup_keep_first in dedup.py (bodies
-    # zero diff; paragraph_dedup stays IN), target_mix_sample/
-    # select_and_pack in sampling.py (zero diff this batch), bigram_pmi
-    # in textstats.py (body zero diff; perplexity_buckets and
-    # quality_ensemble stay IN covering that family):
-    "crawl_delays", "sitemap_urls", "latest_crawl_dedup",
-    "target_mix_sample", "paragraph_dedup_keep_first", "bigram_pmi",
-    "select_and_pack",
-    # rotated out as script_stats / text_churn entered (both r6-driver-
-    # green; perplexity_buckets' body in textstats.py and
-    # intra_doc_line_dedup's in dedup.py have zero diff this batch —
-    # the diffs are the script_profile / crawl_text_churn ADDITIONS —
-    # and quality_ensemble / paragraph_dedup stay IN covering those
-    # families):
-    "perplexity_buckets", "intra_doc_line_dedup",
-    # rotated out as phrase_search / trustrank / incremental_near_dup
-    # entered (all three below are r6-driver-green and this batch's
-    # diffs to their modules are pure function ADDITIONS:
-    # retrieval.phrase_search — bm25_topk stays IN covering
-    # retrieval.py; graph.trustrank — host_hits stays IN covering
-    # graph.py; dedup.incremental_near_dup — substring_span_dedup and
-    # canonical_dedup stay IN covering dedup.py):
-    "bm25_multi_topk", "host_pagerank", "paragraph_dedup",
-    # rotated out as resolve_redirects / host_boilerplate /
-    # recrawl_schedule / url_trap_stats entered. All four below are
-    # r6-driver-green with ZERO diff to their chains since the r6 close
-    # (verified via git diff 50c9d5c..HEAD): hnsw.py and robots.py are
-    # untouched this round; textstats.py's r7 diffs are pure function
-    # ADDITIONS (quality_ensemble's body zero diff; script_stats stays
-    # IN covering textstats.py); pipeline.py's r7 diffs are the
-    # build_training_corpus / recrawl_schedule / url_trap_stats
-    # ADDITIONS plus clean_corpus's keep_text (default path identical,
-    # and clean_corpus + frontier_next + build_training_corpus stay IN
-    # covering pipeline.py):
-    "quality_ensemble", "fetch_schedule", "hnsw_ann_topk", "robots_filter",
-    # rotated out as mirror_hosts / domain_token_quota entered (both
-    # below are r6-driver-green; pdf content-stream parsing in kernel.py
-    # is UNTOUCHED by this round's kernel diffs — the r7 kernel changes
-    # are the resolver fast-path guard, head-boundary fix and the shared
-    # strip pass, all on the HTML link/head path, and pdf_extract_text
-    # stays IN the window covering the pdf family):
-    "pdf_fields", "line_stats",
-    # rotated out as refresh_frontier entered (r6-driver-green; the r7
-    # retrieval.py diff is the phrase_search ADDITION — bm25_topk's body
-    # has zero diff and phrase_search stays IN covering retrieval.py):
-    "bm25_topk",
-    # rotated out as cdc_chunks / cdc_dup_fraction entered (both below
-    # are r6-driver-green with zero-diff bodies this round: the r7
-    # dedup.py diffs are pure ADDITIONS — canonical_dedup stays IN
-    # covering dedup.py — and the r7 sampling.py diffs are the
-    # domain_token_quota ADDITION, with domain_token_quota itself IN
-    # covering sampling.py):
-    "substring_span_dedup", "weighted_sample",
-    # rotated out as bloom_membership / bloom_merge entered (both below
-    # are r6-driver-green; their graph.py bodies have zero r7 diff —
-    # the r7 graph.py changes are the hits/trustrank/resolve_redirects
-    # ADDITIONS plus localCheckpoint calls inside hits/trustrank only,
-    # and host_hits/trustrank/resolve_redirects stay IN covering
-    # graph.py. Their kernel-side INPUT (extract_links output) is also
-    # unchanged: the r7 kernel fixes kept the link goldens
-    # byte-identical, and extract_links stays IN covering the kernel
-    # link path):
-    "anchor_text_topk", "link_target_stats",
-    # rotated out as tracking_params entered (r6-driver-green; its
-    # textstats.py body has zero r7 diff — the r7 textstats changes are
-    # pure ADDITIONS (script_profile/chunk_*/cdc_*) — and it reads the
-    # documents table, untouched by the r7 kernel fixes; script_stats
-    # and cdc_chunks stay IN covering textstats.py):
-    "gopher_line_quality",
-    # rotated out as domain_disjoint_split entered (r6-driver-green via
-    # its r6 single-pass rewrite; its sampling.py body has zero r7 diff
-    # — the r7 sampling changes are the domain_token_quota /
-    # domain_disjoint_split ADDITIONS plus dsir_select's quantized
-    # cutoff, and dsir_select / domain_token_quota stay IN covering
-    # sampling.py; build_training_corpus additionally exercises the
-    # token_budget_select body inside the window every round):
-    "token_budget_select",
-    # rotated out as reciprocal_links entered (r6-driver-green; its
-    # pipeline.py body has zero r7 diff — the r7 pipeline changes are
-    # the build_training_corpus / recrawl_schedule / url_trap_stats /
-    # tracking_params ADDITIONS plus clean_corpus's keep_text — and its
-    # registered query reads fixture tables, not the kernel corpus;
-    # refresh_frontier (the same anti-join + robots + per-host-budget
-    # composition, revisit side) and clean_corpus stay IN covering
-    # pipeline.py):
-    "frontier_next",
-    # rotated out as sq8_ann_topk entered (r6-driver-green; the r7
-    # kernel diffs — resolver '?#' fast-path guard, head-boundary fix,
-    # shared comment/CDATA/script strip pass — all live on the
-    # link/head extraction paths, not the table-cell/code path this
-    # query rides, and every kernel golden is byte-identical this
-    # round; extract_cells and solde_status stay IN covering the
-    # table-cell kernel family, extract_text/extract_links/
-    # page_metadata cover the text/link/head paths):
-    "fiscal_codes",
-    # rotated out as reshard_movement entered (r6-driver-green; same
-    # zero-r7-diff argument as fiscal_codes above: operators/solde.py
-    # is untouched this round and its kernel cell path is outside the
-    # r7 link/head diffs, goldens byte-identical; extract_cells stays
-    # IN covering the table-cell kernel family):
-    "solde_status",
-    # rotated out as lsh_threshold_curve entered (r6-driver-green; the
-    # field parsers (kernel.py:497-648 region) are outside every r7
-    # kernel diff — resolver/head/strip-pass changes live on the
-    # link/head paths — and the fields golden is byte-identical;
-    # extract_text / extract_links / extract_cells / page_metadata
-    # stay IN covering the text, link, cell and head kernel paths):
-    "extract_fields",
-    # rotated out as extract_headings entered (r6-driver-green; the
-    # table-cell path (_find_tables/_table_cells) is outside every r7
-    # kernel diff — the headings addition is a separate DFS after
-    # _analyze — and the cells golden re-froze byte-identical this
-    # session; extract_headings/extract_text/extract_links/
-    # page_metadata all ride the same cached kernel extraction in the
-    # window, so the Arrow pass itself stays driver-covered):
-    "extract_cells",
-    # rotated out as url_versions entered (r6-driver-green; the pdf
-    # content-stream parser has ZERO r7 diff — the same argument under
-    # which pdf_fields rotated to the tail earlier this round — and the
-    # pdf goldens re-froze byte-identical this session. This leaves the
-    # pdf family tail-gated only for r7 (sf0.001 every pytest run +
-    # sf0.01 via tools/check_oracles.py), which is the discipline's
-    # contract for zero-diff chains; both pdf queries were driver-green
-    # in r6):
-    "pdf_extract_text",
-    # rotated out as bm25f_topk entered (r6-driver-green; its r7
-    # signature extension routes ONLY the new trained-centroids path,
-    # which semantic_dedup_trained — IN the window — exercises
-    # end-to-end; the registered semantic_dedup query runs the default
-    # path whose output is identical to its r6-green run, and
-    # sq8_ann_topk + semantic_dedup_trained stay IN covering
-    # simsearch.py):
-    "semantic_dedup",
-]
-
-
-# Queries registered while the 50-slot window is already saturated with
-# behavior-changed entries: they sort AFTER every window entry but
-# BEFORE the verified tail (positions 51+), are enforced for this round
-# by the sf0.001 pytest gate + sf0.01 tools/check_oracles.py, and
-# rotate INTO the next round's window first.
-_WINDOW_OVERFLOW = ["corpus_report", "corpus_drift", "ingest_delta",
-                    "hdr_length_gate", "dedup_weights",
-                    "truncated_ann_topk", "sitemap_tree",
-                    "phrase_search_multi", "event_funnel",
-                    "host_quality_profile"]
-
-
-def _reorder_registry() -> None:
-    skip = set(_WINDOW_TAIL) | set(_WINDOW_OVERFLOW)
-    order = [n for n in QUERIES if n not in skip]
-    order += [n for n in _WINDOW_OVERFLOW if n in QUERIES]
-    order += [n for n in _WINDOW_TAIL if n in QUERIES]
-    for d in (QUERIES, ORACLES):
-        moved = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(moved)
-
-
-_reorder_registry()

@@ -49,6 +49,16 @@ def test_unconverged_raises(spark):
         connected_components(pairs, max_iter=2)
 
 
+def test_iteration_budget_accepts_diameter_below_max_iter(spark):
+    """Two half-steps per round must keep the one-step budget: a chain of
+    diameter max_iter - 1 converges."""
+    edges = [(i, i + 1) for i in range(5)]
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    rows = connected_components(pairs, max_iter=6).collect()
+    assert len(rows) == 6
+    assert all(r["component"] == 0 for r in rows)
+
+
 def test_dedup_clusters_bounds_pathological_identical_corpus(spark):
     """ONE page copied 1500 times: the default clustering path must
     collapse the exact group to a single representative before LSH (no

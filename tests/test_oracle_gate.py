@@ -1,12 +1,12 @@
-"""Enforced oracle gate for the rotated-out registry tail.
+"""Enforced oracle gate for the whole query registry.
 
-The driver's CORRECTNESS artifact records only the FIRST 50 registry
-entries; the `_WINDOW_TAIL` queries rotated out of that window relied on
-manual `tools/check_oracles.py` invocations. This test makes their gate
-AUTOMATIC: every tail query runs against its DuckDB oracle twin at
-sf0.001 on every pytest run. The hash comparison is scale-agnostic (both
-engines read the same parquet), so the tiny tier keeps this fast while
-still catching any Spark/oracle divergence.
+Every name in `ORACLES` runs against its DuckDB oracle twin at sf0.001 on
+every pytest run, in registration order; the hash-bucketed dedup queries
+run a second time at another shuffle-partition count. Both engines read the
+same parquet and the comparison is `tools/check_oracles.py`'s
+order-insensitive value hash, so it is scale-agnostic: the tiny tier keeps
+the sweep to a few minutes while still catching any Spark/oracle
+divergence. `tools/check_oracles.py` repeats the sweep at sf0.01.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ import sys
 
 import duckdb
 import pytest
+
+from ocr_cezam_spark import queries as Q
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO))
@@ -27,7 +29,7 @@ SF_DIR = _ENV_DIR or "/root/testdata/sf0.001"
 # explicit override was given — a dev machine without the driver-generated
 # parquet. An explicitly-set OCR_CEZAM_GATE_SF_DIR that doesn't exist is a
 # configuration BUG and must fail loudly (a typo'd env var silently
-# skipping all 42 tail oracle checks would green the suite with the whole
+# skipping every oracle check would green the suite with the whole
 # cross-engine gate disabled).
 pytestmark = pytest.mark.skipif(
     _ENV_DIR is None and not os.path.isdir(SF_DIR),
@@ -38,15 +40,9 @@ pytestmark = pytest.mark.skipif(
 def test_gate_fixture_dir_exists():
     """Fails (never skips) when an explicit gate dir is set but missing."""
     assert os.path.isdir(SF_DIR), (
-        f"OCR_CEZAM_GATE_SF_DIR={SF_DIR} does not exist — the tail oracle "
-        "gate would be silently disabled"
+        f"OCR_CEZAM_GATE_SF_DIR={SF_DIR} does not exist — the oracle gate "
+        "would be silently disabled"
     )
-
-
-def _tail_names():
-    from ocr_cezam_spark import queries as Q
-
-    return [n for n in Q._WINDOW_TAIL if n in Q.QUERIES and n in Q.ORACLES]
 
 
 @pytest.fixture(scope="module")
@@ -63,14 +59,37 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", _tail_names())
-def test_tail_query_matches_oracle(spark, duck, name):
-    from ocr_cezam_spark import queries as Q
+# Queries whose output is grouped by hash buckets run a second time at a
+# different shuffle-partition count: bucket membership must not depend on
+# how rows are spread over partitions. Their cases keep the ids `<name>0`
+# (session partition count) and `<name>1` (this count).
+_HASH_BUCKETED = ("minhash_lsh_pairs", "simhash_buckets")
+_ALT_SHUFFLE_PARTITIONS = 3
+
+
+def _cases():
+    for name in Q.ORACLES:
+        if name in _HASH_BUCKETED:
+            yield pytest.param(name, None, id=f"{name}0")
+            yield pytest.param(name, _ALT_SHUFFLE_PARTITIONS, id=f"{name}1")
+        else:
+            yield pytest.param(name, None, id=name)
+
+
+@pytest.mark.parametrize("name,shuffle_partitions", list(_cases()))
+def test_tail_query_matches_oracle(spark, duck, name, shuffle_partitions):
     from tools.check_oracles import table_hash
 
-    df = Q.QUERIES[name](spark, SF_DIR)
-    cols = df.columns
-    rows = [tuple(r) for r in df.collect()]
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    if shuffle_partitions is not None:
+        spark.conf.set(key, str(shuffle_partitions))
+    try:
+        df = Q.QUERIES[name](spark, SF_DIR)
+        cols = df.columns
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        spark.conf.set(key, saved)
     spark_hash, spark_n = table_hash(cols, rows)
 
     rel = duck.sql(Q.ORACLES[name])

@@ -122,25 +122,16 @@ def test_minhash_signature_exchange_reused_at_runtime(spark):
         assert ep.count("ReusedExchange") >= min_reuse, (name, ep[:500])
 
 
-def test_driver_window_holds_exactly_50_queries():
-    """The driver records the FIRST 50 registry entries; every query not
-    rotated into _WINDOW_TAIL must fit that window exactly, and the tail
-    must reference real queries (guards future additions that would
-    silently push a new query out of the CORRECTNESS record)."""
-    from ocr_cezam_spark import queries as Q
-
-    names = list(Q.QUERIES)
-    skip = set(Q._WINDOW_TAIL) | set(Q._WINDOW_OVERFLOW)
-    front = [n for n in names if n not in skip]
-    assert len(front) == 50, (len(front), front[50:])
-    assert set(Q._WINDOW_TAIL) <= set(names)
-    assert not set(Q._WINDOW_TAIL) & set(Q._WINDOW_OVERFLOW)
-    assert names[:50] == front
-    # overflow entries sort directly after the window, before the tail
-    n_over = len(Q._WINDOW_OVERFLOW)
-    assert names[50:50 + n_over] == [
-        n for n in Q._WINDOW_OVERFLOW if n in Q.QUERIES
-    ]
+def test_spread_keeps_column_pruning(spark):
+    """The floor hashes on the table's id column only, so a narrow select
+    over a spread table still prunes the scan: the FileScan reads exactly
+    the selected columns, not the whole row."""
+    df = Q._t(spark, SF, "documents").select("doc_id", "source")
+    ep = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(doc_id" in ep, ep
+    scans = [ln for ln in ep.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1, ep
+    assert "ReadSchema: struct<doc_id:bigint,source:string>" in scans[0], scans[0]
 
 
 def test_new_operator_plans_stay_native(spark):

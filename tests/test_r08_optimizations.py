@@ -71,6 +71,6 @@ def test_spread_floor_is_scale_adaptive(spark):
 
     n = spark.sparkContext.defaultParallelism
     small = spark.range(100).coalesce(1)
-    assert _spread(small).rdd.getNumPartitions() == n
+    assert _spread(small, "id").rdd.getNumPartitions() == n
     big = spark.range(1000).repartition(n * 2)
-    assert _spread(big) is big
+    assert _spread(big, "id") is big
