@@ -5,6 +5,14 @@ pre-filters -> explicit repartition by url-hash (salted for hot hosts)
 -> mapInArrow kernel -> long-format output tables + per-partition
 metrics -> append with resume anti-join.
 
+Output files are sized by bytes: the checkpointed kernel output is
+coalesced to one partition per ``spark.sql.files.maxPartitionBytes`` of
+input html (capped at the kernel's partition count), so a small run
+writes one file per table. The eight secondary tables then commit
+concurrently, and the ``extracted`` resume marker commits last, only
+after all eight have. Every Spark job the run launches carries a
+``run_job: <step>`` job description and stays in the caller's job group.
+
 Cluster launch::
 
     spark-submit --py-files ocr_cezam_spark.zip driver.py \
@@ -21,15 +29,41 @@ Locally the same code runs on ``local[N]`` against parquet (see
 from __future__ import annotations
 
 import argparse
+import math
+import re
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
-
-from pyspark.sql import Observation
 
 from .operators import extract as X
 from .skew import HOT_HOST_THRESHOLD, detect_hot_hosts, salted_repartition
 from .sources import catalog
+
+_BYTE_UNITS = {"": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40, "p": 2**50}
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size string (``134217728``, ``16m``, ``8kb``) in bytes."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", value.lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
+
+
+@contextmanager
+def _step(spark: SparkSession, what: str):
+    """Label this thread's Spark jobs ``run_job: <what>``; restore the
+    caller's description on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_job: {what}")
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_job(
@@ -52,7 +86,10 @@ def run_job(
     # written with the OTHER redaction state must not be appended to,
     # with OR without resume (a --no-resume append would mix rows with
     # and without the n_* columns in one directory). Refuse loudly.
-    existing = catalog.read(spark, extracted_table)
+    # The marker table is read (and listed) once; the resume anti-join
+    # below reuses this frame.
+    with _step(spark, "read marker"):
+        existing = catalog.read(spark, extracted_table)
     if existing is not None:
         was_redacted = "n_emails" in existing.columns
         if was_redacted != redact_pii:
@@ -63,7 +100,7 @@ def run_job(
                 "state. Use a fresh --output-prefix."
             )
     if resume:
-        docs = catalog.resume_filter(docs, spark, extracted_table)
+        docs = catalog.without_committed(docs, existing)
 
     # Hot-host detection runs ONCE, on the column-pruned url column of the
     # REMAINING work (post pre-filter and resume anti-join): on a resume
@@ -71,7 +108,8 @@ def run_job(
     # remaining 1% — the exact straggler salting exists to prevent. One
     # action; the anti-join it re-executes is url-column-pruned.
     threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
-    hot_hosts = detect_hot_hosts(docs.select("url"), threshold)
+    with _step(spark, "hot hosts"):
+        hot_hosts = detect_hot_hosts(docs.select("url"), threshold)
     docs = salted_repartition(docs, num_partitions, hot_hosts=hot_hosts)
     out = X.run_extract(docs)
 
@@ -94,8 +132,18 @@ def run_job(
     # and cuts the plan's tie to the table path. (On a real cluster the
     # equivalent durable pattern is staging the nested output to its own
     # table first; executor loss here just restarts the resume job.)
-    out = out.localCheckpoint(eager=True)
-    counts: dict[str, int] = {}
+    with _step(spark, "kernel"):
+        out = out.localCheckpoint(eager=True)
+    # Size the output files by bytes, not by the kernel's partition count:
+    # one partition per maxPartitionBytes of input html, at most
+    # num_partitions. A small run then commits one file per table instead
+    # of num_partitions small ones. coalesce is a narrow dependency on the
+    # checkpoint, so the kernel stage and the part_id lineage column stay
+    # as they are (the metrics table still groups by part_id).
+    observed = obs.get
+    bytes_in = int(observed.get("bytes_in") or 0)
+    split = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    out = out.coalesce(max(1, min(num_partitions, math.ceil(bytes_in / split))))
     # (url, digest) table: the standing index for cross-run incremental
     # dedup — the next increment's operators.dedup.incremental_dedup reads
     # this table as its corpus side instead of re-hashing all prior text.
@@ -120,34 +168,50 @@ def run_job(
         ext = scrub.pii_redact(
             ext, id_col="url", keep_cols=("n_bytes", "error")
         ).withColumnRenamed("text_redacted", "text")
-    # 'extracted' is the RESUME MARKER (resume_filter anti-joins on it),
-    # so it commits LAST: a crash mid-loop then re-processes those urls
-    # and re-appends the secondary tables (at-least-once, dedupable by
-    # url downstream) instead of permanently losing their rows (the
-    # marker-first order made fields/cells/... unrecoverable for any url
-    # whose marker committed before the crash).
-    for name, df in (
-        ("fields", X.extracted_fields(out)),
-        ("cells", X.extracted_cells(out)),
-        ("statuses", X.extracted_statuses(out)),
-        ("codes", X.extracted_codes(out)),
-        ("links", X.extracted_links(out)),
-        ("headings", X.extracted_headings(out)),
-        ("digests", digests),
-        ("metrics", X.partition_metrics(out)),
-        ("extracted", ext),
-    ):
+
+    def write(name: str, df: DataFrame) -> int:
         # Row counts ride the write action itself via observe() — one
         # action per table, never a second .count() pass re-executing the
         # projection (pure waste at scale).
         table_obs = Observation(f"rows_{name}")
-        catalog.append(
-            df.observe(table_obs, F.count(F.lit(1)).alias("n")),
-            f"{output_prefix}/{name}",
-        )
-        counts[name] = int(table_obs.get.get("n") or 0)
-    counts["observed_docs"] = int(obs.get.get("docs") or 0)
-    counts["observed_errors"] = int(obs.get.get("errors") or 0)
+        with _step(spark, f"append {name}"):
+            catalog.append(
+                df.observe(table_obs, F.count(F.lit(1)).alias("n")),
+                f"{output_prefix}/{name}",
+            )
+        return int(table_obs.get.get("n") or 0)
+
+    secondary = {
+        "fields": X.extracted_fields(out),
+        "cells": X.extracted_cells(out),
+        "statuses": X.extracted_statuses(out),
+        "codes": X.extracted_codes(out),
+        "links": X.extracted_links(out),
+        "headings": X.extracted_headings(out),
+        "digests": digests,
+        "metrics": X.partition_metrics(out),
+    }
+    # The secondary tables are independent appends, each a small job on
+    # the checkpoint, so they commit concurrently. Each task is wrapped on
+    # its own: inheritable_thread_target hands the writer thread a copy of
+    # the caller's local properties (job group, description) taken at wrap
+    # time, and one copy per task keeps the threads' descriptions apart.
+    # Leaving the `with` block waits for all eight, also when one fails.
+    with ThreadPoolExecutor(max_workers=len(secondary)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in secondary.items()
+        }
+    counts = {name: f.result() for name, f in futures.items()}
+    # 'extracted' is the RESUME MARKER (the anti-join above reads it), so
+    # it commits LAST, and only once every secondary table has committed:
+    # a failed or crashed secondary write re-processes those urls on the
+    # next run and re-appends the secondary tables (at-least-once,
+    # dedupable by url downstream) instead of permanently losing their
+    # rows, as a marker committed beside them would.
+    counts["extracted"] = write("extracted", ext)
+    counts["observed_docs"] = int(observed.get("docs") or 0)
+    counts["observed_errors"] = int(observed.get("errors") or 0)
     # localCheckpoint blocks are NOT released by DataFrame.unpersist()
     # (that only clears CacheManager entries from .cache()/.persist());
     # they are freed by the ContextCleaner once the checkpointed RDD is

@@ -57,7 +57,12 @@ def resume_filter(docs: DataFrame, spark: SparkSession, table: str) -> DataFrame
     url column of the committed snapshot (column pruning + manifest
     pruning), so the resume scan is cheap even at 10^12 rows.
     """
-    done = read(spark, table)
+    return without_committed(docs, read(spark, table))
+
+
+def without_committed(docs: DataFrame, done: DataFrame | None) -> DataFrame:
+    """``resume_filter`` against a committed frame the caller already read
+    with ``read`` (None: nothing committed yet)."""
     if done is None:
         return docs
     return docs.join(done.select("url"), on="url", how="left_anti")

@@ -206,3 +206,88 @@ def test_headings_identical(out):
         g = _golden(i)
         want = [(p, lv, t) for p, (lv, t) in enumerate(g["headings"])]
         assert sorted(got.get(g["url"], [])) == want
+
+
+_TABLES = ("fields", "cells", "statuses", "codes", "links", "headings",
+           "digests", "metrics", "extracted")
+
+
+@pytest.fixture(scope="module")
+def sized_runs(spark, tmp_path_factory):
+    """The same 300-doc run_job at the session's maxPartitionBytes (16m:
+    the input fits one split) and at 8k (more splits than partitions)."""
+    from ocr_cezam_spark.job import run_job
+
+    docs = corpus_df(spark, 300)
+    base = tmp_path_factory.mktemp("sized")
+
+    def run(name: str) -> tuple[str, dict]:
+        prefix = str(base / name)
+        return prefix, run_job(spark, docs, prefix, num_partitions=8)
+
+    runs = {"default": run("default")}
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8k")
+    try:
+        runs["8k"] = run("8k")
+    finally:
+        spark.conf.set(key, prev)
+    return runs
+
+
+def _n_files(prefix: str, table: str) -> int:
+    import glob
+
+    return len(glob.glob(f"{prefix}/{table}/*.parquet"))
+
+
+def test_small_run_writes_one_file_per_table(sized_runs):
+    prefix, _ = sized_runs["default"]
+    assert {t: _n_files(prefix, t) for t in _TABLES} == {t: 1 for t in _TABLES}
+
+
+def test_small_byte_split_keeps_one_file_per_partition(sized_runs):
+    prefix, _ = sized_runs["8k"]
+    plain = [t for t in _TABLES if t != "metrics"]
+    assert {t: _n_files(prefix, t) for t in plain} == {t: 8 for t in plain}
+
+
+def test_file_sizing_keeps_metrics_and_counts(spark, sized_runs):
+    (small, counts), (split, split_counts) = sized_runs["default"], sized_runs["8k"]
+    assert counts == split_counts
+    assert counts["extracted"] == counts["observed_docs"] == 300
+    metrics = {
+        p: sorted(tuple(r) for r in spark.read.parquet(f"{p}/metrics").collect())
+        for p in (small, split)
+    }
+    assert len(metrics[small]) == counts["metrics"] == 8
+    assert metrics[small] == metrics[split]
+    for t in _TABLES:
+        rows = [sorted(map(tuple, spark.read.parquet(f"{p}/{t}").collect()),
+                       key=repr) for p in (small, split)]
+        assert rows[0] == rows[1], t
+
+
+def test_run_job_jobs_stay_in_caller_group(spark, tmp_path):
+    """Every Spark job of run_job, the concurrent appends' included, runs in
+    the caller's job group; the caller's job description is restored."""
+    from ocr_cezam_spark.job import run_job
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "run_job group test")
+    sc.setJobDescription("caller")
+    try:
+        run_job(spark, corpus_df(spark, 40), str(tmp_path / "grp"), num_partitions=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    in_g = sorted(tracker.getJobIdsForGroup("g"))
+    assert len(in_g) >= 10  # read marker, hot hosts, kernel, nine appends
+    # job ids are sequential: a gap is a job that ran outside group g
+    assert in_g == list(range(in_g[0], in_g[-1] + 1))

@@ -75,3 +75,34 @@ def test_catalog_read_raises_on_non_missing_errors(spark, tmp_path):
         # parquet footer errors may surface at action time
         if df is not None:
             df.collect()
+
+
+def test_failed_secondary_write_leaves_marker_uncommitted(spark, tmp_path, monkeypatch):
+    """The marker commits only after every secondary table: a failed
+    secondary append leaves no `extracted` rows, and the rerun commits
+    each url exactly once."""
+    import os
+
+    import pytest as _pytest
+
+    docs = corpus_df(spark, 40)
+    prefix = str(tmp_path / "crash")
+    real_append = catalog.append
+
+    def failing_append(df, table):
+        if table.endswith("/links"):
+            raise RuntimeError("injected links failure")
+        real_append(df, table)
+
+    monkeypatch.setattr(catalog, "append", failing_append)
+    with _pytest.raises(RuntimeError, match="injected links failure"):
+        run_job(spark, docs, prefix, num_partitions=4)
+    assert not os.path.exists(f"{prefix}/extracted")
+
+    monkeypatch.setattr(catalog, "append", real_append)
+    counts = run_job(spark, docs, prefix, num_partitions=4)
+    assert counts["extracted"] == 40
+    urls = [r["url"] for r in catalog.read(spark, f"{prefix}/extracted").collect()]
+    assert len(urls) == len(set(urls)) == 40
+    # links never committed on the failed run, so the rerun's rows are all
+    assert catalog.read(spark, f"{prefix}/links").count() == counts["links"]
