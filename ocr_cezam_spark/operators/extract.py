@@ -9,9 +9,13 @@ round-trips (the reference writes page JPEGs and re-reads them,
 
 The kernel itself is pure Python per row but *batched* via Arrow — no
 row-at-a-time Python UDF anywhere (``input_hint``: "no per-row Python").
-Per-partition lineage comes from a ``part_id`` column stamped with
-``TaskContext.partitionId()`` inside the kernel pass, aggregated
-relationally afterwards (never a driver-side loop).
+Output batches are built column by column: ``url`` and ``lang`` pass
+through as Arrow columns, ``n_bytes`` is an Arrow compute, and the kernel's
+tuples become structs as returned; ``posexplode`` numbers links and
+headings (their ``pos``) in the projections. Per-partition lineage comes
+from a ``part_id`` column stamped with ``TaskContext.partitionId()`` inside
+the kernel pass, aggregated relationally afterwards (never a driver-side
+loop).
 """
 
 from __future__ import annotations
@@ -19,15 +23,18 @@ from __future__ import annotations
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel import extract
 
 # Nested output of one kernel pass; exploded into long-format tables by the
 # projection helpers below (cells stay long-format per SURVEY.md 1.3 —
-# groupBy/pivot re-assembly only at the edge).
+# groupBy/pivot re-assembly only at the edge). Each struct's fields follow
+# the order of the kernel's tuples, so those tuples convert as they are.
 EXTRACT_SCHEMA = pa.schema(
     [
         pa.field("url", pa.string()),
@@ -78,28 +85,16 @@ EXTRACT_SCHEMA = pa.schema(
         pa.field(
             "links",
             pa.list_(
-                pa.struct([("pos", pa.int32()), ("href", pa.string()),
-                           ("anchor", pa.string())])
+                pa.struct([("href", pa.string()), ("anchor", pa.string())])
             ),
         ),
         pa.field(
             "headings",
             pa.list_(
-                pa.struct([("pos", pa.int32()), ("level", pa.int32()),
-                           ("heading", pa.string())])
+                pa.struct([("level", pa.int32()), ("heading", pa.string())])
             ),
         ),
     ]
-)
-
-EXTRACT_DDL = (
-    "url string, lang string, text string, n_bytes long, error string, "
-    "part_id int, fields map<string,string>, "
-    "cells array<struct<table_id:int,row_id:int,col_id:int,value:string>>, "
-    "statuses array<struct<table_id:int,status:string,detail:string>>, "
-    "codes array<struct<table_id:int,code:string,pos:int,value:string>>, "
-    "links array<struct<pos:int,href:string,anchor:string>>, "
-    "headings array<struct<pos:int,level:int,heading:string>>"
 )
 
 
@@ -109,7 +104,7 @@ def _extract_batches(
     ctx = TaskContext.get()
     part_id = ctx.partitionId() if ctx is not None else -1
     for batch in batches:
-        urls = batch.column("url").to_pylist()
+        url, html, lang = (batch.column(c) for c in ("url", "html", "lang"))
         # Zero-copy payload views: to_pylist() would materialize every
         # html payload as a Python bytes object (one full copy of the
         # batch's bytes) before the kernel's decode copies them AGAIN
@@ -117,52 +112,28 @@ def _extract_batches(
         # data buffer instead, so the only payload-sized copy left on
         # the hot path is the unavoidable bytes->str decode — this is
         # the memory-bus lever for the saturated local[32] pair.
-        htmls = [v.as_buffer() if v.is_valid else None
-                 for v in batch.column("html")]
-        langs = batch.column("lang").to_pylist()
-        out: dict[str, list] = {name: [] for name in EXTRACT_SCHEMA.names}
-        for url, html, lang in zip(urls, htmls, langs):
-            res = extract(url, html if html is not None else b"", lang)
-            out["url"].append(url)
-            out["lang"].append(lang)
-            out["text"].append(res["text"])
-            out["n_bytes"].append(len(html) if html is not None else 0)
-            out["error"].append(res["error"])
-            out["part_id"].append(part_id)
-            # Arrow map type wants list[tuple]; fixed key order for
-            # byte-stable output.
-            out["fields"].append(sorted(res["fields"].items()))
-            out["cells"].append(
-                [
-                    {"table_id": t, "row_id": r, "col_id": c, "value": v}
-                    for (t, r, c, v) in res["cells"]
-                ]
-            )
-            out["statuses"].append(
-                [
-                    {"table_id": t, "status": s, "detail": d}
-                    for (t, s, d) in res["statuses"]
-                ]
-            )
-            out["codes"].append(
-                [
-                    {"table_id": t, "code": c, "pos": p, "value": v}
-                    for (t, c, p, v) in res["codes"]
-                ]
-            )
-            out["links"].append(
-                [
-                    {"pos": i, "href": h, "anchor": t}
-                    for i, (h, t) in enumerate(res["links"])
-                ]
-            )
-            out["headings"].append(
-                [
-                    {"pos": i, "level": lv, "heading": t}
-                    for i, (lv, t) in enumerate(res["headings"])
-                ]
-            )
-        yield pa.RecordBatch.from_pydict(out, schema=EXTRACT_SCHEMA)
+        res = [
+            extract(u, h.as_buffer() if h.is_valid else b"", lg)
+            for u, h, lg in zip(url.to_pylist(), html, lang.to_pylist())
+        ]
+        cols = {
+            name: [r[name] for r in res]
+            for name in ("text", "error", "cells", "statuses", "codes",
+                         "links", "headings")
+        }
+        yield pa.RecordBatch.from_pydict(
+            {
+                **cols,
+                "url": url,
+                "lang": lang,
+                "n_bytes": pc.binary_length(html).fill_null(0).cast(pa.int64()),
+                "part_id": [part_id] * len(res),
+                # Arrow map type wants list[tuple]; fixed key order for
+                # byte-stable output.
+                "fields": [sorted(r["fields"].items()) for r in res],
+            },
+            schema=EXTRACT_SCHEMA,
+        )
 
 
 def run_extract(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -176,7 +147,8 @@ def run_extract(docs: DataFrame, num_partitions: int | None = None) -> DataFrame
     pruned = docs.select("url", "html", "lang")
     if num_partitions:
         pruned = pruned.repartition(num_partitions, F.xxhash64("url"))
-    return pruned.mapInArrow(_extract_batches, EXTRACT_DDL)
+    return pruned.mapInArrow(_extract_batches,
+                             from_arrow_schema(EXTRACT_SCHEMA))
 
 
 # ---- long-format projections (the Iceberg output tables of SURVEY.md 1.3) --
@@ -212,8 +184,8 @@ def extracted_links(out: DataFrame) -> DataFrame:
     """(url, pos, href, anchor): the crawl-frontier table — document-
     ordered anchor targets per page with their anchor text, long format
     like the other projections."""
-    return out.select("url", F.explode("links").alias("l")).select(
-        "url", "l.pos", "l.href", "l.anchor"
+    return out.select("url", F.posexplode("links").alias("pos", "l")).select(
+        "url", "pos", "l.href", "l.anchor"
     )
 
 
@@ -221,8 +193,8 @@ def extracted_headings(out: DataFrame) -> DataFrame:
     """(url, pos, level, heading): the page OUTLINE table — document-
     ordered h1-h6 text per page, the structural skeleton heading-aware
     passage chunking and section-level dedup key on."""
-    return out.select("url", F.explode("headings").alias("h")).select(
-        "url", "h.pos", "h.level", "h.heading"
+    return out.select("url", F.posexplode("headings").alias("pos", "h")).select(
+        "url", "pos", "h.level", "h.heading"
     )
 
 

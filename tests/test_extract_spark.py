@@ -100,6 +100,13 @@ def test_error_isolation(spark):
     docs = spark.createDataFrame(pdf)
     out = X.run_extract(docs, 2).collect()
     assert len(out) == 4
+    # n_bytes is the html payload length, 0 for a null payload
+    html = dict(zip(pdf["url"], pdf["html"]))
+    for r in out:
+        if html[r["url"]] is None:
+            assert (r["n_bytes"], r["text"]) == (0, "")
+        else:
+            assert r["n_bytes"] == len(html[r["url"]])
 
 
 class _DeadSession:

@@ -78,7 +78,7 @@ def _cases():
 
 @pytest.mark.parametrize("name,shuffle_partitions", list(_cases()))
 def test_tail_query_matches_oracle(spark, duck, name, shuffle_partitions):
-    from tools.check_oracles import table_hash
+    from tools.check_oracles import canon_type, spark_types, table_hash
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -87,6 +87,7 @@ def test_tail_query_matches_oracle(spark, duck, name, shuffle_partitions):
     try:
         df = Q.QUERIES[name](spark, SF_DIR)
         cols = df.columns
+        types = spark_types(df)
         rows = [tuple(r) for r in df.collect()]
     finally:
         spark.conf.set(key, saved)
@@ -94,6 +95,11 @@ def test_tail_query_matches_oracle(spark, duck, name, shuffle_partitions):
 
     rel = duck.sql(Q.ORACLES[name])
     oracle_hash, oracle_n = table_hash(list(rel.columns), rel.fetchall())
+    oracle_types = {c: canon_type(str(t)) for c, t in zip(rel.columns, rel.types)}
 
+    # The value hash ignores column names and types; check them as well,
+    # like tools/check_oracles.py does.
+    assert sorted(cols) == sorted(rel.columns), (name, cols, rel.columns)
+    assert types == oracle_types, (name, types, oracle_types)
     assert spark_n == oracle_n, (name, spark_n, oracle_n)
     assert spark_hash == oracle_hash, (name, spark_n)
