@@ -47,8 +47,3 @@ def round_he(col: Column | str, k: int) -> Column:
     # otherwise branch as NULL.
     finite = ~F.isnan(col) & (F.abs(col) != F.lit(float("inf")))
     return F.when(finite, F.floor(col * f + F.lit(0.5)) / f).otherwise(col)
-
-
-def sql_round_he(expr: str, k: int) -> str:
-    """The DuckDB-side twin of :func:`round_he` for building oracle SQL."""
-    return f"floor(({expr}) * 1e{k} + 0.5) / 1e{k}"

@@ -67,15 +67,3 @@ def format_fr_date(d: Column) -> Column:
         F.lit(" "),
         F.year(d).cast("string"),
     )
-
-
-def decimal_comma(s: Column) -> Column:
-    """French decimal comma -> double (F8). try_cast: non-numeric input
-    yields null like the kernel's gated _parse_float, instead of an
-    ANSI-mode NumberFormatException killing the job."""
-    return F.regexp_replace(s, ",", ".").try_cast("double")
-
-
-def digit_filter(s: Column) -> Column:
-    """Keep digits only (F9, bilan.py:184,206)."""
-    return F.regexp_replace(s, "[^0-9]", "")

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 from .operators import extract as X
-from .skew import HOT_HOST_THRESHOLD, detect_hot_hosts, salted_repartition
+from .skew import salted_repartition
 from .sources import catalog
 
 _BYTE_UNITS = {"": 1, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40, "p": 2**50}
@@ -102,15 +102,14 @@ def run_job(
     if resume:
         docs = catalog.without_committed(docs, existing)
 
-    # Hot-host detection runs ONCE, on the column-pruned url column of the
-    # REMAINING work (post pre-filter and resume anti-join): on a resume
-    # run the committed 99% must not mask a host that dominates the
-    # remaining 1% — the exact straggler salting exists to prevent. One
-    # action; the anti-join it re-executes is url-column-pruned.
-    threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
+    # Hot-host detection runs ONCE, on the REMAINING work (post pre-filter
+    # and resume anti-join): on a resume run the committed 99% must not
+    # mask a host that dominates the remaining 1% — the exact straggler
+    # salting exists to prevent. One action; detect_hot_hosts projects
+    # only the url's host, so the anti-join it re-executes stays
+    # url-column-pruned.
     with _step(spark, "hot hosts"):
-        hot_hosts = detect_hot_hosts(docs.select("url"), threshold)
-    docs = salted_repartition(docs, num_partitions, hot_hosts=hot_hosts)
+        docs = salted_repartition(docs, num_partitions)
     out = X.run_extract(docs)
 
     # A6 analog (SURVEY 2.4): free job-level counters via observe() —
@@ -191,6 +190,11 @@ def run_job(
         "digests": digests,
         "metrics": X.partition_metrics(out),
     }
+    if not observed.get("docs"):
+        # No work left (a no-op resume): append nothing, so an idle rerun
+        # adds no empty file to any table.
+        return dict.fromkeys(
+            [*secondary, "extracted", "observed_docs", "observed_errors"], 0)
     # The secondary tables are independent appends, each a small job on
     # the checkpoint, so they commit concurrently. Each task is wrapped on
     # its own: inheritable_thread_target hands the writer thread a copy of

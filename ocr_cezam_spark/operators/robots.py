@@ -156,10 +156,6 @@ def _applicable_groups(robots: DataFrame, host_col: str, txt_col: str,
     return grouped, specific.unionByName(star_fallback)
 
 
-def _star_groups(robots: DataFrame, host_col: str, txt_col: str):
-    return _applicable_groups(robots, host_col, txt_col, agent=None)
-
-
 def robots_rules(robots: DataFrame, host_col: str = "host",
                  txt_col: str = "robots_txt",
                  agent: str | None = None) -> DataFrame:

@@ -33,9 +33,3 @@ def assert_has(df: DataFrame, *needles: str) -> None:
     plan = formatted_plan(df)
     for needle in needles:
         assert needle in plan, f"'{needle}' missing from plan:\n{plan}"
-
-
-def assert_not_has(df: DataFrame, *needles: str) -> None:
-    plan = formatted_plan(df)
-    for needle in needles:
-        assert needle not in plan, f"'{needle}' unexpectedly in plan"

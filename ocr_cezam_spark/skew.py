@@ -76,8 +76,7 @@ def domain_quota_sample(docs: DataFrame, group_col: str = "source",
 
 
 def salted_repartition(
-    docs: DataFrame, num_partitions: int, salt_buckets: int = 16,
-    hot_hosts: list[str] | None = None,
+    docs: DataFrame, num_partitions: int, salt_buckets: int = 16
 ) -> DataFrame:
     """Repartition on (host, salt) where salt splits the hosts that could
     dominate a partition — the two-pass hot-key pattern: pass 1 finds hosts
@@ -87,15 +86,11 @@ def salted_repartition(
     lands whole in one partition), pass 2 keys hot hosts by
     (host, pmod(xxhash64(url), salt_buckets)) and cold hosts by (host, 0)
     so small hosts stay co-located while no host can create a straggler.
-    Deterministic, so output bytes are reproducible.
-
-    Pass ``hot_hosts`` explicitly to skip the detection scan (e.g. when the
-    caller already knows the skew profile, or detected it on the pruned
-    source before other transformations — see job.run_job).
+    Deterministic, so output bytes are reproducible. Pass 1 is one action
+    on the host column only (see detect_hot_hosts).
     """
-    if hot_hosts is None:
-        threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
-        hot_hosts = detect_hot_hosts(docs, threshold)
+    threshold = min(HOT_HOST_THRESHOLD, 0.5 / max(num_partitions, 1))
+    hot_hosts = detect_hot_hosts(docs, threshold)
     host = host_of()
     if hot_hosts:
         salt = F.when(

@@ -5,14 +5,14 @@ current fill statistics whenever rows for it arrive. This is the
 standing-corpus admission filter a crawl ingest loop keeps warm: the
 batch operator rebuilds it per epoch, this one absorbs deltas.
 
-Mechanism: ``applyInPandasWithState`` keyed on the group with the
-sorted set-bit list as state (<= m_bits longs — CONSTANT-SIZE by
-geometry like every sketch state here). Bit positions are the SAME
-salted-md5 computation the batch operator codegens (`bf{i}:` salts,
-first 8 md5 hex chars mod m_bits), so the stream's final bit set is
-BIT-IDENTICAL to batch bloom_bits (tests assert exactly that, plus a
-checkpointed restart). Null keys are IGNORED (the key-sketch
-convention).
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on the
+group with the sorted set-bit list as state (<= m_bits longs —
+CONSTANT-SIZE by geometry like every sketch state here). Bit positions
+are the SAME salted-md5 computation the batch operator codegens
+(`bf{i}:` salts, first 8 md5 hex chars mod m_bits), so the stream's
+final bit set is BIT-IDENTICAL to batch bloom_bits (tests assert exactly
+that, plus a checkpointed restart). Null keys are IGNORED (the
+key-sketch convention).
 
 Order-safety is free: set union is commutative and idempotent, so
 duplicate and out-of-order deliveries converge — the same argument as
@@ -27,11 +27,10 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import changelog_stream, group_keys, non_null_keys
 
 OUTPUT_SCHEMA = ("grp string, n_bits_set long, fill_frac double, "
                  "n_rows long")
@@ -56,38 +55,19 @@ def bloom_stream(events: DataFrame, key_col: str = "k",
     is the operational resize signal (FP rate ~ fill^k). APPEND output;
     n_rows monotonic per group — compact by max n_rows."""
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        (grp,) = key
-        if state.exists:
-            stored, n_rows = state.get
-            bits = set(stored)
-        else:
-            bits, n_rows = set(), 0
-        changed = False
-        for pdf in pdfs:
-            # dropna BEFORE astype(str): the key-sketch null convention
-            for key_s in pdf["k"].dropna().astype(str):
-                n_rows += 1
-                changed = True
-                bits.update(bloom_positions_py(key_s, m_bits, k))
-        state.update((sorted(bits), n_rows))
-        if changed:
-            frac = math.floor(len(bits) / m_bits * 1e4 + 0.5) / 1e4
-            yield pd.DataFrame({
-                "grp": [grp],
-                "n_bits_set": [len(bits)],
-                "fill_frac": [frac],
-                "n_rows": [n_rows],
-            })
+    def step(grp, state, chunks):
+        bits, n_rows = (set(state[0]), state[1]) if state else (set(), 0)
+        seen = n_rows
+        for key_s in non_null_keys(chunks):
+            n_rows += 1
+            bits.update(bloom_positions_py(key_s, m_bits, k))
+        if n_rows == seen:
+            return None, []
+        frac = math.floor(len(bits) / m_bits * 1e4 + 0.5) / 1e4
+        return (sorted(bits), n_rows), [{
+            "grp": grp, "n_bits_set": len(bits), "fill_frac": frac,
+            "n_rows": n_rows,
+        }]
 
-    cols = events.select(
-        events[group_col].alias("grp"), events[key_col].alias("k")
-    )
-    return cols.groupBy("grp").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(group_keys(events, group_col, key_col), "grp",
+                            step, OUTPUT_SCHEMA, STATE_SCHEMA)

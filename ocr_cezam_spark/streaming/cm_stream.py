@@ -4,7 +4,8 @@ per-group Count-Min counter table plus a Misra-Gries candidate summary
 across micro-batches and re-emit the group's current heavy hitters
 whenever rows for it arrive.
 
-Mechanism: ``applyInPandasWithState`` keyed on the group. State is the
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on the
+group. State is the
 d x w = 256 Count-Min counters (flattened ``array<long>``), the MG
 summary (at most ``MG_K`` keys + counts), and a row counter — all
 CONSTANT-SIZE per group no matter how many billions of rows stream
@@ -36,13 +37,11 @@ materializes), so downstream can union shards/days without replay.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.sketch import _CM_D, _CM_W
+from .state import changelog_stream, group_keys, non_null_keys
 
 MG_K = 8  # Misra-Gries counters: every key with freq > n/8 is retained
 THRESHOLD_FRAC = 0.02  # same default as batch cm_heavy_hitters
@@ -88,47 +87,34 @@ def _mg_ingest(mg: dict[str, int], key: str) -> None:
                 del mg[k]
 
 
-def _update_cm(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (grp,) = key
-    if state.exists:
-        counters_s, mg_keys, mg_counts, n_rows = state.get
+def _step_cm(grp, state, chunks):
+    if state:
+        counters_s, mg_keys, mg_counts, n_rows = state
         counters = list(counters_s)
         mg = dict(zip(mg_keys, mg_counts))
     else:
         counters, mg, n_rows = [0] * (_CM_D * _CM_W), {}, 0
-    changed = False
-    for pdf in pdfs:
-        # dropna BEFORE astype(str): null keys are ignored (the batch
-        # cm_sketch convention), never stringified into a 'None' key
-        for k in pdf["k"].dropna().astype(str):
-            n_rows += 1
-            changed = True
-            for i, b in enumerate(_cm_buckets(k)):
-                counters[i * _CM_W + b] += 1
-            _mg_ingest(mg, k)
-    state.update(
-        (counters, list(mg.keys()), list(mg.values()), n_rows)
+    seen = n_rows
+    for k in non_null_keys(chunks):
+        n_rows += 1
+        for i, b in enumerate(_cm_buckets(k)):
+            counters[i * _CM_W + b] += 1
+        _mg_ingest(mg, k)
+    if n_rows == seen:
+        return None, []
+    thresh = int(n_rows * THRESHOLD_FRAC)
+    hitters = sorted(
+        (
+            (k, est)
+            for k, est in ((k, _cm_point_est(counters, k)) for k in mg)
+            if est >= thresh
+        ),
+        key=lambda t: (-t[1], t[0]),
     )
-    if changed:
-        thresh = int(n_rows * THRESHOLD_FRAC)
-        hitters = sorted(
-            (
-                (k, est)
-                for k, est in ((k, _cm_point_est(counters, k)) for k in mg)
-                if est >= thresh
-            ),
-            key=lambda t: (-t[1], t[0]),
-        )
-        yield pd.DataFrame(
-            {
-                "grp": [grp],
-                "n_rows": [n_rows],
-                "counters": [counters],
-                "hitters": [hitters],
-            }
-        )
+    return (counters, list(mg.keys()), list(mg.values()), n_rows), [{
+        "grp": grp, "n_rows": n_rows, "counters": counters,
+        "hitters": hitters,
+    }]
 
 
 def cm_stream(events: DataFrame, key_col: str = "k",
@@ -140,13 +126,5 @@ def cm_stream(events: DataFrame, key_col: str = "k",
     APPEND output like hll_stream: each emission is that batch's current
     snapshot; n_rows is monotonic per group, so consumers compact by max
     n_rows — the changelog pattern every stateful op here follows."""
-    cols = events.select(
-        events[group_col].alias("grp"), events[key_col].alias("k")
-    )
-    return cols.groupBy("grp").applyInPandasWithState(
-        _update_cm,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(group_keys(events, group_col, key_col), "grp",
+                            _step_cm, OUTPUT_SCHEMA, STATE_SCHEMA)

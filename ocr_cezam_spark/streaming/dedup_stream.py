@@ -20,17 +20,8 @@ this operator's output.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
-
-
-def read_docs_stream(spark: SparkSession, path: str, schema: str,
-                     max_files: int = 4) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files))
-        .parquet(path)
-    )
 
 
 def dedup_stream(docs: DataFrame, ts_col: str | None = None,

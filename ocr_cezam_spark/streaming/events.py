@@ -14,10 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 
-def read_events_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
+def read_events_stream(spark: SparkSession, path: str, schema: str,
+                       max_files: int = 4) -> DataFrame:
+    """A parquet file stream with a fixed schema, at most ``max_files``
+    new files per micro-batch."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "4")
+        .option("maxFilesPerTrigger", str(max_files))
         .parquet(path)
     )
 

@@ -20,16 +20,6 @@ from ..corpus import CORPUS_SCHEMA
 from ..operators import extract as X
 
 
-def read_documents_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    return (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
-
-
 def extract_stream(docs: DataFrame) -> DataFrame:
     """Streaming extraction: identical kernel, identical pruning — the
     mapInArrow pass supports streaming DataFrames natively (no
@@ -43,9 +33,10 @@ def run_extract_stream(
 ) -> None:
     """Drain all currently-available input files through the kernel into
     a parquet sink, exactly-once per source file via the checkpoint."""
-    from .events import run_available_now
+    from .events import read_events_stream, run_available_now
 
-    out = extract_stream(read_documents_stream(spark, in_path)).select(
+    docs = read_events_stream(spark, in_path, CORPUS_SCHEMA)
+    out = extract_stream(docs).select(
         "url", "lang", "text", "n_bytes", "error", "part_id"
     )
     run_available_now(out, checkpoint, out_path)

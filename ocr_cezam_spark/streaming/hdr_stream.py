@@ -3,19 +3,19 @@
 per-group bounded bucket counters across micro-batches and re-emit the
 group's current quantile estimates whenever rows for it arrive.
 
-Mechanism: ``applyInPandasWithState`` keyed on the group with the
-bucket histogram as state (two parallel arrays, buckets + counts —
-at most 64 * 2^sub_bits entries per group, CONSTANT-SIZE like every
-sketch state here; exact streaming quantiles would hold every value
-ever seen). The per-row bucket map is the SAME pure-integer function
-the batch operator codegens (exponent from bit_length, top sub_bits
-mantissa bits; values < 1 and NULLs to the -1 underflow bucket —
-NULLs are COUNTED here, matching hdr_sketch's totality convention
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on the
+group with the bucket histogram as state (two parallel arrays, buckets +
+counts — at most 64 * 2^sub_bits entries per group, CONSTANT-SIZE like
+every sketch state here; exact streaming quantiles would hold every
+value ever seen). The per-row bucket map is the SAME pure-integer
+function the batch operator codegens (exponent from bit_length, top
+sub_bits mantissa bits; values < 1 and NULLs to the -1 underflow bucket
+— NULLs are COUNTED here, matching hdr_sketch's totality convention
 rather than the key-sketches' null-drop convention), and the quantile
-fold is the same lower-bound-of-first-bucket-reaching-ceil(q*n)
-integer walk, so the stream's final emission is BIT-IDENTICAL to the
-batch operator's answer (tests assert exactly that, plus a
-checkpointed restart).
+fold is the same lower-bound-of-first-bucket-reaching-ceil(q*n) integer
+walk, so the stream's final emission is BIT-IDENTICAL to the batch
+operator's answer (tests assert exactly that, plus a checkpointed
+restart).
 
 Order-safety is free: counter addition is commutative, so out-of-order
 micro-batches converge to the same histogram — the same argument as
@@ -29,11 +29,10 @@ Counter before touching state.
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import changelog_stream
 
 OUTPUT_SCHEMA = "grp string, q double, est long, n_rows long"
 STATE_SCHEMA = "buckets array<long>, cnts array<long>, n_rows long"
@@ -90,45 +89,30 @@ def hdr_stream(events: DataFrame, value_col: str = "v",
     batch's current answer; n_rows is monotonic per group, so consumers
     compact by max n_rows — the changelog pattern."""
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        (grp,) = key
-        if state.exists:
-            buckets, cnts, n_rows = state.get
+    def step(grp, state, chunks):
+        if state:
+            buckets, cnts, n_rows = state
             hist = dict(zip(buckets, cnts))
         else:
             hist, n_rows = {}, 0
-        changed = False
-        for pdf in pdfs:
-            col = pdf["v"]
-            for val in col:
+        seen = n_rows
+        for pdf in chunks:
+            for val in pdf["v"]:
                 # NULLs count in the underflow bucket (hdr_sketch's
                 # totality convention) — pandas hands them as NaN
                 b = hdr_bucket_py(val, sub_bits)
                 hist[b] = hist.get(b, 0) + 1
                 n_rows += 1
-                changed = True
+        if n_rows == seen:
+            return None, []
         items = sorted(hist.items())
-        state.update((
-            [b for b, _ in items], [c for _, c in items], n_rows,
-        ))
-        if changed:
-            rows = hdr_quantiles_py(hist, qs, sub_bits)
-            yield pd.DataFrame({
-                "grp": [grp] * len(rows),
-                "q": [q for q, _ in rows],
-                "est": [e for _, e in rows],
-                "n_rows": [n_rows] * len(rows),
-            })
+        return ([b for b, _ in items], [c for _, c in items], n_rows), [
+            {"grp": grp, "q": q, "est": est, "n_rows": n_rows}
+            for q, est in hdr_quantiles_py(hist, qs, sub_bits)
+        ]
 
     cols = events.select(
         events[group_col].alias("grp"),
         events[value_col].cast("long").alias("v"),
     )
-    return cols.groupBy("grp").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(cols, "grp", step, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -3,17 +3,18 @@
 per-group HyperLogLog registers across micro-batches and re-emit the
 group's current estimate whenever it changes.
 
-Mechanism: ``applyInPandasWithState`` keyed on the group with the 1024
-register values as state (one ``array<int>`` plus a row counter — the
-whole point of the sketch is that this state is CONSTANT-SIZE per group
-no matter how many billions of rows stream through, which is what makes
-unbounded distinct-count feasible at all; exact streaming distinct would
-hold every key ever seen). The per-row hash/bucket/rho math is the SAME
-md5-derived computation the batch operator runs in Spark SQL — hashlib
-md5 of the identical UTF-8 text, bucket = h >> 22, rho = leading zeros
-of the 22 rest bits + 1 — and the estimate fold uses the same constants,
-so the stream's final emission is BIT-IDENTICAL to the batch operator's
-answer (tests assert exactly that, plus checkpointed restart).
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on the
+group with the 1024 register values as state (one ``array<int>`` plus a
+row counter — the whole point of the sketch is that this state is
+CONSTANT-SIZE per group no matter how many billions of rows stream
+through, which is what makes unbounded distinct-count feasible at all;
+exact streaming distinct would hold every key ever seen). The per-row
+hash/bucket/rho math is the SAME md5-derived computation the batch
+operator runs in Spark SQL — hashlib md5 of the identical UTF-8 text,
+bucket = h >> 22, rho = leading zeros of the 22 rest bits + 1 — and the
+estimate fold uses the same constants, so the stream's final emission is
+BIT-IDENTICAL to the batch operator's answer (tests assert exactly that,
+plus checkpointed restart).
 
 Order-safety is free: register max-merge is commutative and idempotent,
 so out-of-order and duplicate delivery can only converge to the same
@@ -26,15 +27,15 @@ one group call (max into a local array) before touching state.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
-from typing import Iterable, Iterator
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.sketch import _HLL_ALPHA, _HLL_M, _HLL_REST_BITS
+from .state import changelog_stream, group_keys, non_null_keys
 
 OUTPUT_SCHEMA = "grp string, hll_est double, n_regs long, n_rows long"
 STATE_SCHEMA = "regs array<int>, n_rows long"
@@ -69,33 +70,26 @@ def hll_estimate(regs: list[int]) -> tuple[float, int]:
     return math.floor(est * 1e4 + 0.5) / 1e4, n_regs
 
 
-def _update_hll(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (grp,) = key
-    if state.exists:
-        regs_stored, n_rows = state.get
-        regs = list(regs_stored)
-    else:
-        regs, n_rows = [0] * _HLL_M, 0
-    changed = False
-    for pdf in pdfs:
-        # dropna BEFORE astype(str): the sketches ignore null keys (the
-        # batch convention); stringifying first would turn None into the
-        # real key 'None' and diverge from the batch answer
-        for k in pdf["k"].dropna().astype(str):
-            b, rho = _bucket_rho(k)
+def _register_step(m: int, bucket_rho: Callable[[str], tuple[int, int]],
+                   estimate: Callable[[list[int]], tuple[float, int]]):
+    """The changelog step both hash widths share: max-merge each key's
+    rho into its register, then fold the width's own estimator."""
+
+    def step(grp, state, chunks):
+        regs, n_rows = (list(state[0]), state[1]) if state else ([0] * m, 0)
+        seen = n_rows
+        for k in non_null_keys(chunks):
+            b, rho = bucket_rho(k)
             n_rows += 1
-            changed = True
             if rho > regs[b]:
                 regs[b] = rho
-    state.update((regs, n_rows))
-    if changed:
-        est, n_regs = hll_estimate(regs)
-        yield pd.DataFrame(
-            {"grp": [grp], "hll_est": [est], "n_regs": [n_regs],
-             "n_rows": [n_rows]}
-        )
+        if n_rows == seen:
+            return None, []
+        est, n_regs = estimate(regs)
+        return (regs, n_rows), [{"grp": grp, "hll_est": est,
+                                 "n_regs": n_regs, "n_rows": n_rows}]
+
+    return step
 
 
 def hll_stream(events: DataFrame, key_col: str = "k",
@@ -107,16 +101,9 @@ def hll_stream(events: DataFrame, key_col: str = "k",
     current estimate; n_rows is monotonic per group, so consumers
     compact by max n_rows — the changelog pattern every stateful op
     here follows."""
-    cols = events.select(
-        events[group_col].alias("grp"), events[key_col].alias("k")
-    )
-    return cols.groupBy("grp").applyInPandasWithState(
-        _update_hll,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    step = _register_step(_HLL_M, _bucket_rho, hll_estimate)
+    return changelog_stream(group_keys(events, group_col, key_col), "grp",
+                            step, OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 # --- 64-bit-hash streaming mode ------------------------------------------
@@ -165,38 +152,7 @@ def hll_stream64(events: DataFrame, key_col: str = "k",
     from ..operators.sketch import _hll64_geometry
 
     m, _rest_bits, _alpha = _hll64_geometry(p)
-
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        (grp,) = key
-        if state.exists:
-            regs_stored, n_rows = state.get
-            regs = list(regs_stored)
-        else:
-            regs, n_rows = [0] * m, 0
-        changed = False
-        for pdf in pdfs:
-            for k in pdf["k"].dropna().astype(str):
-                b, rho = _bucket_rho64(k, p)
-                n_rows += 1
-                changed = True
-                if rho > regs[b]:
-                    regs[b] = rho
-        state.update((regs, n_rows))
-        if changed:
-            est, n_regs = hll_estimate64(regs, p)
-            yield pd.DataFrame(
-                {"grp": [grp], "hll_est": [est], "n_regs": [n_regs],
-                 "n_rows": [n_rows]}
-            )
-
-    cols = events.select(
-        events[group_col].alias("grp"), events[key_col].alias("k")
-    )
-    return cols.groupBy("grp").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    step = _register_step(m, functools.partial(_bucket_rho64, p=p),
+                          functools.partial(hll_estimate64, p=p))
+    return changelog_stream(group_keys(events, group_col, key_col), "grp",
+                            step, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -3,17 +3,17 @@
 per-group k smallest distinct 60-bit key hashes across micro-batches and
 re-emit the group's current distinct estimate whenever it changes.
 
-Mechanism: ``applyInPandasWithState`` keyed on the group with the sorted
-hash list as state (``array<long>`` of at most k values plus a row
-counter — CONSTANT-SIZE per group like every sketch state here; exact
-streaming distinct would hold every key ever seen). The per-row hash is
-the SAME md5 computation the batch operator runs in Spark SQL (first 15
-hex chars of md5 of the identical UTF-8 text, so 60 bits — fits a
-signed long on the state schema), and the estimator is the same
-``(k-1) * 2^60 / kth`` with the same exact-small-set branch and the same
-round_he(4) fold, so the stream's final emission is BIT-IDENTICAL to the
-batch operator's answer (tests assert exactly that, plus checkpointed
-restart).
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on the
+group with the sorted hash list as state (``array<long>`` of at most k
+values plus a row counter — CONSTANT-SIZE per group like every sketch
+state here; exact streaming distinct would hold every key ever seen).
+The per-row hash is the SAME md5 computation the batch operator runs in
+Spark SQL (first 15 hex chars of md5 of the identical UTF-8 text, so 60
+bits — fits a signed long on the state schema), and the estimator is the
+same ``(k-1) * 2^60 / kth`` with the same exact-small-set branch and the
+same round_he(4) fold, so the stream's final emission is BIT-IDENTICAL
+to the batch operator's answer (tests assert exactly that, plus
+checkpointed restart).
 
 Order-safety is free: "insert then keep the k smallest distinct" is
 commutative and idempotent over deliveries, so out-of-order and
@@ -29,13 +29,11 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.sketch import _KMV_SCALE
+from .state import changelog_stream, group_keys, non_null_keys
 
 OUTPUT_SCHEMA = "grp string, n_hashes long, est_distinct double, n_rows long"
 STATE_SCHEMA = "hs array<long>, n_rows long"
@@ -69,47 +67,23 @@ def kmv_stream(events: DataFrame, key_col: str = "k",
     estimate; n_rows is monotonic per group, so consumers compact by max
     n_rows — the changelog pattern every stateful op here follows."""
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        (grp,) = key
-        if state.exists:
-            hs_stored, n_rows = state.get
-            hs = list(hs_stored)
-        else:
-            hs, n_rows = [], 0
-        seen = set(hs)
-        changed = False
-        for pdf in pdfs:
-            # dropna BEFORE astype(str): sketches ignore null keys (the
-            # batch convention); stringifying first would turn None into
-            # the real key 'None' and diverge from the batch answer
-            for key_s in pdf["k"].dropna().astype(str):
-                n_rows += 1
-                changed = True
-                h = _h60_py(key_s)
-                if h not in seen:
-                    seen.add(h)
-                    hs.append(h)
-        if changed:
-            hs.sort()
-            del hs[k:]
-            state.update((hs, n_rows))
-            yield pd.DataFrame({
-                "grp": [grp],
-                "n_hashes": [len(hs)],
-                "est_distinct": [kmv_estimate_py(hs, k)],
-                "n_rows": [n_rows],
-            })
-        else:
-            state.update((hs, n_rows))
+    def step(grp, state, chunks):
+        hs, n_rows = (list(state[0]), state[1]) if state else ([], 0)
+        seen, n_before = set(hs), n_rows
+        for key_s in non_null_keys(chunks):
+            n_rows += 1
+            h = _h60_py(key_s)
+            if h not in seen:
+                seen.add(h)
+                hs.append(h)
+        if n_rows == n_before:
+            return None, []
+        hs.sort()
+        del hs[k:]
+        return (hs, n_rows), [{
+            "grp": grp, "n_hashes": len(hs),
+            "est_distinct": kmv_estimate_py(hs, k), "n_rows": n_rows,
+        }]
 
-    cols = events.select(
-        events[group_col].alias("grp"), events[key_col].alias("k")
-    )
-    return cols.groupBy("grp").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(group_keys(events, group_col, key_col), "grp",
+                            step, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -1,8 +1,8 @@
 """Custom stateful streaming operator: incremental sessionization.
 
-``applyInPandasWithState`` keeps (last_ts, session_id, n_events,
-session_value) per user across micro-batches and emits one row per
-(user, session) per batch — the streaming form of
+``streaming/state.py``'s ``changelog_stream`` keeps (last_ts,
+session_id, n_events, session_value) per user across micro-batches and
+emits one row per (user, session) per batch — the streaming form of
 ``relational.sessionize`` (A5/W3 lag+gap clustering). The batch and
 streaming results must agree on the final session structure
 (tests/test_streaming_state.py).
@@ -13,11 +13,10 @@ store grows with |users|, not |events|; the shuffle is on user_id.
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import changelog_stream
 
 OUTPUT_SCHEMA = (
     "user_id long, session_id long, n_events long, session_value double"
@@ -27,48 +26,34 @@ STATE_SCHEMA = "last_ts double, session_id long, n_events long, session_value do
 GAP_SECONDS = 1800.0
 
 
-def _update_sessions(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        last_ts, session_id, n_events, session_value = state.get
-    else:
-        last_ts, session_id, n_events, session_value = (None, 0, 0, 0.0)
-
-    touched: dict[int, tuple[int, float]] = {}
+def _step_sessions(user_id, state, chunks):
+    last_ts, session_id, n_events, session_value = (
+        state or (None, 0, 0, 0.0))
     # A group's micro-batch rows arrive as MULTIPLE Arrow chunks (split at
     # arrow.maxRecordsPerBatch); sorting each chunk independently would
     # process chunk 2's earlier timestamps after chunk 1's later ones and
     # silently merge/misplace session boundaries. Concatenate, sort ONCE.
-    frames = [pdf for pdf in pdfs]
-    if frames:
-        whole = pd.concat(frames).sort_values(["ts", "event_id"])
-        for ts, value in zip(
-            whole["ts"].astype("int64") / 1e9,
-            whole["value"].astype("float64"),
-        ):
-            if last_ts is not None and ts - last_ts > GAP_SECONDS:
-                session_id += 1
-                n_events, session_value = 0, 0.0
-            last_ts = ts
-            n_events += 1
-            session_value = round(session_value + value, 2)
-            touched[session_id] = (n_events, session_value)
-
-    state.update((last_ts, session_id, n_events, session_value))
-    if touched:
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": user_id,
-                    "session_id": sid,
-                    "n_events": n,
-                    "session_value": v,
-                }
-                for sid, (n, v) in touched.items()
-            ]
-        )
+    frames = list(chunks)
+    if not frames:
+        return None, []
+    touched: dict[int, tuple[int, float]] = {}
+    whole = pd.concat(frames).sort_values(["ts", "event_id"])
+    for ts, value in zip(
+        whole["ts"].astype("int64") / 1e9,
+        whole["value"].astype("float64"),
+    ):
+        if last_ts is not None and ts - last_ts > GAP_SECONDS:
+            session_id += 1
+            n_events, session_value = 0, 0.0
+        last_ts = ts
+        n_events += 1
+        session_value = round(session_value + value, 2)
+        touched[session_id] = (n_events, session_value)
+    return (last_ts, session_id, n_events, session_value), [
+        {"user_id": user_id, "session_id": sid, "n_events": n,
+         "session_value": v}
+        for sid, (n, v) in touched.items()
+    ]
 
 
 def stateful_sessionize(events: DataFrame) -> DataFrame:
@@ -78,10 +63,5 @@ def stateful_sessionize(events: DataFrame) -> DataFrame:
     touches it; the latest row per (user_id, session_id) is the current
     aggregate, and it is final once a newer session for that user exists.
     """
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_sessions,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(events, "user_id", _step_sessions,
+                            OUTPUT_SCHEMA, STATE_SCHEMA, output_mode="update")

@@ -5,9 +5,11 @@ the current open row each time it changes), so the crawl store's
 one-row-per-version table stays current without replaying the fetch
 log.
 
-Mechanism: ``applyInPandasWithState`` keyed on url; state =
+Mechanism: ``streaming/state.py``'s ``changelog_stream`` keyed on url;
+state =
 (digest, version, valid_from, n_fetches, last_ts) — constant-size per
-url. Within a micro-batch rows are processed in (ts) order; ACROSS
+url. Within a micro-batch rows are processed in (ts) order, over the
+whole batch (its Arrow chunks concatenated, then sorted once); ACROSS
 batches the stream assumes per-url event-time monotone arrival (a
 crawl fetch log is an append log — the same contract latest_stream
 documents; out-of-order deliveries ACROSS batches are counted into
@@ -24,11 +26,10 @@ that, plus a checkpointed restart).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state import changelog_stream
 
 OUTPUT_SCHEMA = ("url string, version long, digest string, "
                  "valid_from long, valid_to long, n_fetches long")
@@ -40,51 +41,35 @@ def versions_stream(fetches: DataFrame, url_col: str = "url",
                     ts_col: str = "warc_ts",
                     digest_col: str = "digest") -> DataFrame:
 
-    def update(key: tuple, pdfs: Iterable[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        (url,) = key
-        if state.exists:
-            digest, version, valid_from, n_fetches, last_ts = state.get
-        else:
-            digest, version, valid_from, n_fetches, last_ts = (
-                None, 0, 0, 0, -1)
+    def step(url, state, chunks):
+        digest, version, valid_from, n_fetches, last_ts = (
+            state or (None, 0, 0, 0, -1))
+        frames = [pdf[["ts", "d"]] for pdf in chunks]
+        if not frames:
+            return None, []
         out = []
-        changed = False
-        rows = []
-        for pdf in pdfs:
-            rows.append(pdf[["ts", "d"]])
-        if rows:
-            batch = pd.concat(rows).sort_values("ts")
-            for ts, d in batch.itertuples(index=False):
-                ts = int(ts)
-                changed = True
-                if digest is None or d != digest:
-                    if digest is not None:
-                        # close the running version at the new start
-                        out.append((url, version, digest, valid_from,
-                                    ts, n_fetches))
-                    version += 1
-                    digest, valid_from, n_fetches = d, ts, 1
-                else:
-                    n_fetches += 1
-                last_ts = ts
-        state.update((digest, version, valid_from, n_fetches, last_ts))
-        if changed:
-            out.append((url, version, digest, valid_from, None,
-                        n_fetches))
-            yield pd.DataFrame(
-                out, columns=["url", "version", "digest", "valid_from",
-                              "valid_to", "n_fetches"])
+        for ts, d in pd.concat(frames).sort_values("ts").itertuples(
+                index=False):
+            ts = int(ts)
+            if digest is None or d != digest:
+                if digest is not None:
+                    # close the running version at the new start
+                    out.append((version, digest, valid_from, ts, n_fetches))
+                version += 1
+                digest, valid_from, n_fetches = d, ts, 1
+            else:
+                n_fetches += 1
+            last_ts = ts
+        out.append((version, digest, valid_from, None, n_fetches))
+        return (digest, version, valid_from, n_fetches, last_ts), [
+            {"url": url, "version": v, "digest": dg, "valid_from": vf,
+             "valid_to": vt, "n_fetches": n}
+            for v, dg, vf, vt, n in out
+        ]
 
     cols = fetches.select(
         fetches[url_col].alias("url"),
         fetches[ts_col].cast("long").alias("ts"),
         fetches[digest_col].alias("d"),
     )
-    return cols.groupBy("url").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return changelog_stream(cols, "url", step, OUTPUT_SCHEMA, STATE_SCHEMA)

@@ -106,3 +106,27 @@ def test_failed_secondary_write_leaves_marker_uncommitted(spark, tmp_path, monke
     assert len(urls) == len(set(urls)) == 40
     # links never committed on the failed run, so the rerun's rows are all
     assert catalog.read(spark, f"{prefix}/links").count() == counts["links"]
+
+
+def test_noop_rerun_appends_nothing(spark, tmp_path):
+    """A rerun with no work left returns all-zero counts and adds no file
+    to any table; a later resume with new docs still commits each url
+    exactly once."""
+    import os
+
+    prefix = str(tmp_path / "idle")
+    first = run_job(spark, corpus_df(spark, 30), prefix, num_partitions=4)
+
+    def files():
+        return {t: sorted(os.listdir(f"{prefix}/{t}")) for t in os.listdir(prefix)}
+
+    before = files()
+    assert len(before) == 9
+    rerun = run_job(spark, corpus_df(spark, 30), prefix, num_partitions=4)
+    assert rerun == dict.fromkeys(first, 0)
+    assert files() == before
+
+    counts = run_job(spark, corpus_df(spark, 40), prefix, num_partitions=4)
+    assert counts["extracted"] == 10
+    urls = [r["url"] for r in catalog.read(spark, f"{prefix}/extracted").collect()]
+    assert len(urls) == len(set(urls)) == 40

@@ -52,10 +52,7 @@ def test_dedup_stream_across_microbatches_and_restart(spark, tmp_path):
     """Exact dedup state spans micro-batches AND restarts: a digest first
     seen in file 1 is never re-emitted for its clones in file 2 (same
     run) or file 3 (second availableNow run on the same checkpoint)."""
-    from ocr_cezam_spark.streaming.dedup_stream import (
-        dedup_stream,
-        read_docs_stream,
-    )
+    from ocr_cezam_spark.streaming.dedup_stream import dedup_stream
 
     src = tmp_path / "src"
     src.mkdir()
@@ -74,7 +71,7 @@ def test_dedup_stream_across_microbatches_and_restart(spark, tmp_path):
                + [(200 + i, f"fresh two {i}") for i in range(5)])
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    stream = read_docs_stream(spark, str(src), schema, max_files=1)
+    stream = read_events_stream(spark, str(src), schema, max_files=1)
     run_available_now(dedup_stream(stream), ckpt, out)
     got = spark.read.parquet(out).collect()
     # one row per distinct digest; f1 ids win over their f2 clones
@@ -86,7 +83,7 @@ def test_dedup_stream_across_microbatches_and_restart(spark, tmp_path):
     # restart on the same checkpoint with a new file of old + new content
     write_file("f3", [(300 + i, f"doc body {i}") for i in range(10)]
                + [(400, "brand new three")])
-    stream2 = read_docs_stream(spark, str(src), schema, max_files=1)
+    stream2 = read_events_stream(spark, str(src), schema, max_files=1)
     run_available_now(dedup_stream(stream2), ckpt, out)
     got2 = spark.read.parquet(out).collect()
     assert len(got2) == 16  # only the genuinely-new digest was appended
