@@ -1,8 +1,11 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-All variants are expressed with built-in JVM-side expressions (md5,
-array/lambda functions) — no Python UDFs — so they whole-stage-codegen and
-scale to shuffle-bound, not Python-bound, throughput. md5 is used as the
+The variants are expressed with built-in JVM-side expressions (md5,
+array/lambda functions), so they whole-stage-codegen and scale to
+shuffle-bound, not Python-bound, throughput. The exceptions are
+Arrow-batched, never row-at-a-time Python: the MinHash signature (one
+numpy pass per block of shingles) and the Bloom build/probe of the
+incremental exact dedup. md5 is used as the
 hash everywhere because it is bit-identical across engines (the DuckDB
 oracle computes the same signatures).
 
@@ -15,8 +18,14 @@ prefix) so candidate generation is again a hash shuffle.
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Callable
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
+from pyspark.sql.types import ArrayType, LongType
 
 from ocr_cezam_spark.functions.numeric import round_he
 
@@ -128,26 +137,37 @@ def _words(text_col: str) -> F.Column:
     return F.split(F.col(text_col), " ")
 
 
+def with_words(text_col: str,
+               build: Callable[[F.Column], F.Column]) -> F.Column:
+    """``build(ws)`` with ``ws = split(text, ' ')`` computed ONCE per row.
+
+    An n-gram builder that references the split inside its per-position
+    lambda re-splits the whole text for every position: O(words^2) per
+    document. Binding the array as the variable of a one-element
+    transform evaluates the split once; a null text binds a null array,
+    so null semantics are those of ``build(split(text, ' '))``. (A split
+    projected as its own column is no substitute: CollapseProject
+    inlines the alias back into the lambda.)"""
+    return F.element_at(F.transform(F.array(_words(text_col)), build), 1)
+
+
 def shingles(text_col: str, n: int = 3) -> F.Column:
     """Word n-gram shingles: ['a b c', 'b c d', ...] (>=1 even for short
     docs). Built with sequence+slice — JVM-side, no UDF."""
-    words = _words(text_col)
-    m = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), m),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
+    return with_words(text_col, lambda ws: F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(1))),
+        lambda i: F.array_join(F.slice(ws, i, n), " "),
+    ))
 
 
 # --- MinHash parameters (production-grade: k=64 permutations, 16 bands of
 # 4 rows — s-curve threshold ~ (1/16)^(1/4) ~ 0.5). The k "permutations"
 # are affine universal hashes h_i(x) = (a_i*x + b_i) mod P over a single
 # md5 per shingle (x = first 8 hex chars mod P), so the per-shingle hash
-# cost stays ONE digest regardless of k; the k minimizations are cheap
-# codegen'd integer arithmetic with map-side partial aggregation.
-# P = 2^31-1 keeps a_i*x < 2^62: no bigint overflow in Spark ANSI mode or
-# DuckDB. Coefficients are fixed-seed so the DuckDB oracle twin (generated
-# from the same MINHASH_COEFFS) is bit-identical.
+# cost stays ONE digest regardless of k. P = 2^31-1 keeps a_i*x < 2^62:
+# no int64 overflow in numpy or in the DuckDB oracle. Coefficients are
+# fixed-seed so the DuckDB oracle twin (generated from the same
+# MINHASH_COEFFS) is bit-identical.
 MINHASH_P = 2_147_483_647
 MINHASH_K = 64
 MINHASH_BANDS = 16
@@ -164,41 +184,84 @@ def _make_coeffs(k: int, seed: int = 20_240_816) -> list[tuple[int, int]]:
 
 
 MINHASH_COEFFS = _make_coeffs(MINHASH_K)
+# (k, 1) columns: a block of shingle hashes broadcasts to a (k x rows)
+# array, reduced per document along the contiguous rows axis
+_COEFF_A, _COEFF_B = np.array(MINHASH_COEFFS, dtype=np.int64).T[:, :, None]
+# shingle rows per block: 8 MB of int64 at k = 64, whatever the document
+# lengths in the Arrow batch
+_MINHASH_BLOCK = 1 << 14
+
+
+def _shingle_hashes(text: bytes) -> list[int]:
+    """x per 3-word shingle, as ``shingles`` builds them: splitting the
+    UTF-8 bytes on b' ' is splitting the string on ' '."""
+    ws = text.split(b" ")
+    grams = [b" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)] or [
+        b" ".join(ws)
+    ]
+    return [int.from_bytes(hashlib.md5(g).digest()[:4], "big")  # noqa: S324
+            for g in grams]
+
+
+@F.arrow_udf(ArrayType(LongType()))
+def _minhash(texts: pa.Array) -> pa.Array:
+    """MINHASH_K minima per text: one md5 per shingle, then the affine
+    hashes of a block of shingles as one (k x rows) numpy array, reduced
+    per document with minimum.reduceat. A null text gets k nulls (the
+    min over its one null shingle)."""
+    counts, xs = [], []
+    for t in texts.cast(pa.large_binary()).to_pylist():
+        hs = [] if t is None else _shingle_hashes(t)
+        counts.append(len(hs))
+        xs.extend(hs)
+    x = np.array(xs, dtype=np.int64) % MINHASH_P
+    counts = np.array(counts, dtype=np.int64)
+    live = counts > 0
+    starts = np.cumsum(counts[live]) - counts[live]
+    sig = np.zeros((MINHASH_K, len(starts)), dtype=np.int64)
+    for lo in range(0, len(x), _MINHASH_BLOCK):
+        hi = min(lo + _MINHASH_BLOCK, len(x))
+        # documents d0..d1-1 have shingles in [lo, hi); d0 may have
+        # started in an earlier block
+        d0 = int(np.searchsorted(starts, lo, "right")) - 1
+        d1 = int(np.searchsorted(starts, hi, "left"))
+        block = _COEFF_A * x[lo:hi]
+        block += _COEFF_B
+        np.remainder(block, MINHASH_P, out=block)
+        mins = np.minimum.reduceat(block, np.maximum(starts[d0:d1], lo) - lo,
+                                   axis=1)
+        if starts[d0] < lo:
+            mins[:, 0] = np.minimum(mins[:, 0], sig[:, d0])
+        sig[:, d0:d1] = mins
+    full = np.zeros((len(counts), MINHASH_K), dtype=np.int64)
+    full[live] = sig.T
+    values = pa.array(full.ravel(), mask=np.repeat(~live, MINHASH_K))
+    offsets = pa.array(
+        np.arange(0, len(counts) * MINHASH_K + 1, MINHASH_K, dtype=np.int32)
+    )
+    return pa.ListArray.from_arrays(offsets, values)
 
 
 def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", k: int = MINHASH_K) -> DataFrame:
-    """k-permutation MinHash over 3-word shingles.
+                      text_col: str = "text", k: int = MINHASH_K,
+                      extra: tuple = ()) -> DataFrame:
+    """k-permutation MinHash over 3-word shingles, one row per input row.
 
-    Shape: explode(shingles) -> md5 -> x = hex32 mod P ->
-    groupBy(id).agg(min((a_i*x+b_i) mod P) for i in 0..k) -> sig array.
-    One shuffle, k longs per doc per map partition (partial agg).
+    One Arrow-batched projection: per text, md5 each of the ``shingles``
+    -> x = hex32 mod P -> min over shingles of (a_i*x + b_i) mod P for
+    the first k MINHASH_COEFFS. No explode, no aggregate, no shuffle, so
+    the same call serves a streaming consumer in append mode. Each batch
+    consumer lazily checkpoints the result, so the per-shingle pass runs
+    once however often the signature is joined.
 
-    A shuffle-free variant (array_min over transforms, pure projection)
-    was measured SLOWER end-to-end: LSH pairing consumes the signature
-    three times (bands + both join sides), and this groupBy's exchange is
-    a ReusedExchange for all three consumers, whereas the narrow form
-    recomputes the per-shingle md5 pass per consumer. Keep the aggregate.
-    Returns (id, sig: array<long> length k)."""
-    exploded = docs.select(
-        F.col(id_col), F.explode(shingles(text_col)).alias("sh")
-    )
-    x = (
-        F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-        % F.lit(MINHASH_P)
-    )
-    hashed = exploded.select(F.col(id_col), x.alias("x"))
-    mins = hashed.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                f"mh_{i}"
-            )
-            for i, (a, b) in enumerate(MINHASH_COEFFS[:k])
-        ]
-    )
-    return mins.select(
-        F.col(id_col), F.array(*[f"mh_{i}" for i in range(k)]).alias("sig")
-    )
+    Returns (id, sig: array<long> length k[, *extra]); ``extra`` columns
+    (e.g. the event-time column a streaming consumer watermarks on)
+    pass through. Precondition: ids unique."""
+    sig = _minhash(F.col(text_col))
+    if k != MINHASH_K:
+        sig = F.slice(sig, 1, k)
+    return docs.select(F.col(id_col), sig.alias("sig"),
+                       *[F.col(c) for c in extra])
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -221,31 +284,15 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     exact-dedup FIRST is the preferred fix; the cap is the backstop).
     The size aggregation groups on the same (band_idx, band_key) as the
     pair join, so AQE reuses the exchange rather than adding a shuffle."""
-    r = k // bands
     # The signature frame feeds THREE consumers (band explode + both
-    # sides of the verify join). The groupBy exchange is a ReusedExchange
-    # across them, but each consumer still re-embeds (and re-analyzes)
-    # the per-shingle md5 subtree; a lazy localCheckpoint computes the
+    # sides of the verify join); a lazy localCheckpoint computes the
     # (id, 64-long) table once — at production this is exactly the
     # signature table a dedup run writes before banding.
     sig = minhash_signature(docs, id_col, text_col, k).localCheckpoint(
         eager=False
     )
-    band_arr = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                *[
-                    F.element_at("sig", b * r + j + 1).cast("string")
-                    for j in range(r)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band_idx", "band_key")
-    )
+    banded = banded_sigs(sig, "doc", id_col=id_col, k=k,
+                         bands=bands).select("doc_id", "band_idx", "band_key")
     if max_bucket is not None:
         small = (
             banded.groupBy("band_idx", "band_key")
@@ -254,8 +301,8 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
             .select("band_idx", "band_key")
         )
         banded = banded.join(small, ["band_idx", "band_key"])
-    left = banded.select(F.col(id_col).alias("a"), "band_idx", "band_key")
-    right = banded.select(F.col(id_col).alias("b"), "band_idx", "band_key")
+    left = banded.select(F.col("doc_id").alias("a"), "band_idx", "band_key")
+    right = banded.select(F.col("doc_id").alias("b"), "band_idx", "band_key")
     cand = (
         left.join(right, ["band_idx", "band_key"])
         .filter(F.col("a") < F.col("b"))
@@ -1237,19 +1284,15 @@ def window_dedup_stats(docs: DataFrame, window: int = 30, stride: int = 15,
     substring dedup stays feasible at 100 TB. Window hashes use md5 for
     cross-engine checks; xxhash64 is the production drop-in.
     """
-    words = _words(text_col)
-    n = F.size(words)
-    starts = F.sequence(
-        F.lit(0), F.floor((n - window) / F.lit(stride)).cast("int")
-    )
-    hashes = F.transform(
-        starts,
+    hashes = with_words(text_col, lambda ws: F.transform(
+        F.sequence(F.lit(0),
+                   F.floor((F.size(ws) - window) / F.lit(stride)).cast("int")),
         lambda i: F.md5(
-            F.concat_ws(" ", F.slice(words, i * stride + 1, F.lit(window)))
+            F.concat_ws(" ", F.slice(ws, i * stride + 1, F.lit(window)))
         ),
-    )
+    ))
     occ = (
-        docs.filter(n >= window)
+        docs.filter(F.size(_words(text_col)) >= window)
         .select(F.col(id_col), F.explode(hashes).alias("wh"))
     )
     freq = occ.groupBy("wh").agg(F.count("*").alias("freq"))
@@ -1323,17 +1366,16 @@ def substring_span_dedup(docs: DataFrame, n: int = 5, min_docs: int = 2,
     DuckDB twin compares human-readable keys.
     """
     words = F.split(F.col(text_col), " ")
-    n_pos = F.size(words) - (n - 1)
-    grams = F.when(
-        n_pos >= 1,
+    grams = with_words(text_col, lambda ws: F.when(
+        F.size(ws) - (n - 1) >= 1,
         F.transform(
-            F.sequence(F.lit(1), n_pos),
+            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
             lambda i: F.struct(
                 i.alias("pos"),
-                F.array_join(F.slice(words, i, n), " ").alias("gram"),
+                F.array_join(F.slice(ws, i, n), " ").alias("gram"),
             ),
         ),
-    ).otherwise(F.array().cast("array<struct<pos:int,gram:string>>"))
+    ).otherwise(F.array().cast("array<struct<pos:int,gram:string>>")))
     # positional grams feed the df aggregation AND the coverage join:
     # lazy checkpoint builds the gram table once (guide section 3.3)
     pos_gram = docs.select(
@@ -1747,52 +1789,13 @@ def mirror_hosts(pages: DataFrame, host_col: str = "host",
     )
 
 
-def minhash_signature_rowwise(docs: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text",
-                              k: int = MINHASH_K,
-                              extra: tuple = ()) -> DataFrame:
-    """Projection-only (STATELESS) MinHash signature — bit-identical to
-    ``minhash_signature`` (same md5-per-shingle, same affine coeffs,
-    same min) but computed per ROW via array_min over the in-row
-    shingle-hash array instead of an explode+groupBy. This is the form
-    a STREAMING pipeline needs: a stateful aggregation would force
-    update/complete output mode, while a projection keeps append mode
-    and stream-static joins legal. (For the BATCH pair generator the
-    aggregate form stays preferred — its exchange is reused by all
-    three signature consumers; see minhash_signature's docstring.)
-
-    The shingle-hash array materializes as ONE column first, so the
-    md5 digest is computed once per shingle regardless of k.
-    Returns (id, sig array<long>[, *extra]), schema-identical to the
-    agg form; ``extra`` columns (e.g. the event-time column a streaming
-    consumer watermarks on) pass through — a later re-join would be a
-    stream-stream join on a stream input.
-    """
-    xs = F.transform(
-        shingles(text_col),
-        lambda sh: F.conv(F.substring(F.md5(sh), 1, 8), 16, 10)
-        .cast("long") % F.lit(MINHASH_P),
-    )
-    base = docs.select(F.col(id_col), xs.alias("xs"),
-                       *[F.col(c) for c in extra])
-    sig = F.array(*[
-        F.array_min(F.transform(
-            F.col("xs"),
-            lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P),
-        ))
-        for a, b in MINHASH_COEFFS[:k]
-    ])
-    return base.select(F.col(id_col), sig.alias("sig"),
-                       *[F.col(c) for c in extra])
-
-
 def banded_sigs(sig: DataFrame, tag: str, id_col: str = "doc_id",
                 k: int = MINHASH_K, bands: int = MINHASH_BANDS,
                 extra: tuple = ()) -> DataFrame:
     """LSH band keys from a (id, sig) frame: one row per (band_idx,
     band_key) with the full signature carried for the verify step.
-    Shared by the batch incremental admission and its streaming twin so
-    the band layout cannot drift between them."""
+    Shared by the batch pair generator, the incremental admission and
+    its streaming twin so the band layout cannot drift between them."""
     r = k // bands
     band_arr = F.array(*[
         F.concat_ws("|", *[

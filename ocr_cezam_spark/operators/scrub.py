@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..functions.url import host_suffix
+from .dedup import with_words
 
 # ---------------------------------------------------------------------------
 # PII redaction
@@ -195,15 +196,15 @@ def fix_mojibake(docs: DataFrame, id_col: str = "doc_id",
 def _ngram_hashes(df: DataFrame, id_col: str, text_col: str,
                   n: int) -> DataFrame:
     """(id, gh): md5 of every word-level n-gram, whitespace tokenized.
-    Native exprs only: split -> transform(sequence) builds each window
-    with slice, explode yields one row per gram."""
-    words = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - n),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(words, i + 1, F.lit(n)))),
-    )
+    Native exprs only: the text is split once (dedup.with_words), then
+    transform(sequence) builds each window with slice, explode yields one
+    row per gram."""
+    grams = with_words(text_col, lambda ws: F.transform(
+        F.sequence(F.lit(0), F.size(ws) - n),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(ws, i + 1, F.lit(n)))),
+    ))
     return (
-        df.filter(F.size(words) >= n)
+        df.filter(F.size(F.split(F.col(text_col), " ")) >= n)
         .select(F.col(id_col), F.explode(grams).alias("gh"))
     )
 

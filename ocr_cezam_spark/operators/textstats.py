@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.operators.dedup import with_words
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -75,19 +76,17 @@ def dup_ngram_fraction(docs: DataFrame, n: int = 3, min_docs: int = 2,
     dedup.py:incremental_dedup. Docs too short to have any n-gram keep a
     row with n_grams=0, dup_fraction=0.0 (left join) — dropping them would
     silently exempt short spam from the filter."""
-    words = F.split(F.col(text_col), " ")
-    n_grams_possible = F.size(words) - (n - 1)
     # sequence(1, k) DESCENDS when k < 1 — guard short docs to an empty
     # gram array instead.
-    grams = F.when(
-        n_grams_possible >= 1,
+    grams = with_words(text_col, lambda ws: F.when(
+        F.size(ws) - (n - 1) >= 1,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), n_grams_possible),
-                lambda i: F.array_join(F.slice(words, i, n), " "),
+                F.sequence(F.lit(1), F.size(ws) - (n - 1)),
+                lambda i: F.array_join(F.slice(ws, i, n), " "),
             )
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<string>")))
     pairs = docs.select(F.col(id_col), F.explode(grams).alias("gram"))
     counts = pairs.groupBy("gram").agg(F.count("*").alias("n_docs"))
     per_doc = (
@@ -622,23 +621,21 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 4, w: int = 5,
     only. The rightmost-tie rule is encoded as min(struct(h, -pos)) so
     both engines rank identically with no float anywhere.
     """
-    words = F.split(F.col(text_col), " ")
-    n_pos = F.size(words) - (k - 1)
-    grams = F.when(
-        n_pos >= 1,
+    grams = with_words(text_col, lambda ws: F.when(
+        F.size(ws) - (k - 1) >= 1,
         F.transform(
-            F.sequence(F.lit(1), n_pos),
+            F.sequence(F.lit(1), F.size(ws) - (k - 1)),
             lambda i: F.struct(
                 i.alias("pos"),
                 F.conv(
                     F.substring(
-                        F.md5(F.array_join(F.slice(words, i, k), " ")),
+                        F.md5(F.array_join(F.slice(ws, i, k), " ")),
                         1, 15,
                     ), 16, 10,
                 ).cast("long").alias("h"),
             ),
         ),
-    ).otherwise(F.array().cast("array<struct<pos:int,h:long>>"))
+    ).otherwise(F.array().cast("array<struct<pos:int,h:long>>")))
     gram_rows = docs.select(
         F.col(id_col), F.explode(grams).alias("g")
     ).select(id_col, F.col("g.pos").alias("pos"), F.col("g.h").alias("h"))
@@ -697,20 +694,17 @@ def chunk_passages(docs: DataFrame, chunk: int = 64, stride: int = 48,
     """
     if stride <= 0 or chunk <= 0 or stride > chunk:
         raise ValueError("need 0 < stride <= chunk")
-    words = _words(text_col)
-    nw = F.size(words)
     # last start: largest multiple of stride strictly below n (so every
     # token is covered and no empty chunk is emitted); floor((n-1)/stride)
-    starts = F.sequence(
-        F.lit(0), F.floor((nw - 1) / F.lit(stride)).cast("int")
-    )
-    chunks = F.transform(
-        starts,
-        lambda i: F.array_join(
-            F.slice(words, i * stride + 1, F.lit(chunk)), " "
+    chunks = with_words(text_col, lambda ws: F.transform(
+        F.sequence(
+            F.lit(0), F.floor((F.size(ws) - 1) / F.lit(stride)).cast("int")
         ),
-    )
-    exploded = docs.filter(nw > 0).select(
+        lambda i: F.array_join(
+            F.slice(ws, i * stride + 1, F.lit(chunk)), " "
+        ),
+    ))
+    exploded = docs.filter(F.size(_words(text_col)) > 0).select(
         F.col(id_col).alias("id"),
         F.posexplode(chunks).alias("chunk_idx", "chunk_text"),
     )

@@ -4,10 +4,10 @@ micro-batch of fresh documents is MinHash-banded and checked against the
 STANDING corpus, emitting (new_id, corpus_id, sim_est) rows for
 near-duplicates, in append mode.
 
-Why this shape streams cleanly where the batch operator would not:
-- the signature comes from ``dedup.minhash_signature_rowwise`` — a pure
-  projection (bit-identical math to the batch aggregate form), so no
-  stateful aggregation and append mode stays legal;
+Why this shape streams cleanly:
+- the signature is ``dedup.minhash_signature``, the same Arrow-batched
+  projection the batch operators use, so no stateful aggregation and
+  append mode stays legal;
 - the corpus side is a STATIC band table (``dedup.banded_sigs`` over the
   batch signature) joined stream-static — stateless on the stream side;
   at production the corpus band table is a bucketed parquet/Iceberg
@@ -33,7 +33,6 @@ from ocr_cezam_spark.operators.dedup import (
     MINHASH_K,
     banded_sigs,
     minhash_signature,
-    minhash_signature_rowwise,
 )
 
 
@@ -41,8 +40,7 @@ def corpus_band_table(corpus: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = MINHASH_K,
                       bands: int = MINHASH_BANDS) -> DataFrame:
     """The static side: band keys + signatures for the standing corpus
-    (batch aggregate signature — its exchange shape is irrelevant here,
-    the result is materialized once per corpus epoch)."""
+    (materialized once per corpus epoch)."""
     return banded_sigs(
         minhash_signature(corpus, id_col, text_col, k), "corpus",
         id_col=id_col, k=k, bands=bands,
@@ -59,9 +57,7 @@ def neardup_admission_stream(new_docs: DataFrame, corpus_bands: DataFrame,
                              threshold: float = 0.5) -> DataFrame:
     """Append-mode near-dup admission of a document stream against a
     static corpus band table (see module docstring)."""
-    sig = minhash_signature_rowwise(
-        new_docs, id_col, text_col, k, extra=(ts_col,)
-    )
+    sig = minhash_signature(new_docs, id_col, text_col, k, extra=(ts_col,))
     nb = banded_sigs(sig, "new", id_col=id_col, k=k, bands=bands,
                      extra=(ts_col,))
     matches = F.size(F.filter(

@@ -51,8 +51,9 @@ def test_extraction_plan_prunes_to_kernel_columns(spark):
 
 
 def test_no_python_udf_in_relational_queries(spark):
-    """Every relational/dedup/textstats/simsearch plan must stay JVM-side:
-    no BatchEvalPython (row-at-a-time UDF) anywhere."""
+    """No row-at-a-time Python in any relational/dedup/textstats/simsearch
+    plan: no BatchEvalPython (row-at-a-time UDF) anywhere. Arrow-batched
+    Python, like the MinHash signature, is allowed."""
     for name in (
         "pricing_summary", "sessionize", "dedup_exact", "minhash_lsh_pairs",
         "simhash_buckets", "simhash_hamming_pairs", "token_quality", "langid",
@@ -109,10 +110,10 @@ def test_domain_quota_uses_window_group_limit(spark):
 
 
 def test_minhash_signature_exchange_reused_at_runtime(spark):
-    """The sig aggregate feeds three consumers (bands + both join sides);
-    its shuffle must be computed once and reused — the measured rationale
-    for the aggregate shape (dedup.py). AQE only marks reuse in the FINAL
-    adaptive plan, so this asserts after execution."""
+    """Both sides of the band self-join read the same banded signature
+    table, so its shuffle on (band_idx, band_key) must be computed once
+    and reused. AQE only marks reuse in the FINAL adaptive plan, so this
+    asserts after execution."""
     for name, min_reuse in (("minhash_lsh_pairs", 1),
                             ("near_dup_dedup_first", 1)):
         df = Q.QUERIES[name](spark, SF)
@@ -120,6 +121,51 @@ def test_minhash_signature_exchange_reused_at_runtime(spark):
         ep = df._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in ep, name
         assert ep.count("ReusedExchange") >= min_reuse, (name, ep[:500])
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text inside each ``lambdafunction(...)`` of a plan string."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        i = start + len("lambdafunction(")
+        depth = 1
+        for j in range(i, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[i:j])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_ngram_builders_split_once(spark, monkeypatch):
+    """Every word n-gram builder splits each text ONCE: no split(...)
+    inside a lambda body, where it would re-split the text per n-gram
+    position (O(words^2) per document). Checked on the optimized plan,
+    after CollapseProject could have inlined a projected split back into
+    the lambda. Checkpoints are made no-ops so the plans keep the
+    expressions a lazy checkpoint would hide."""
+    from ocr_cezam_spark.operators import dedup, scrub, textstats
+
+    docs = spark.createDataFrame([(1, "a b c d e f g h i j")],
+                                 "doc_id long, text string")
+    monkeypatch.setattr(type(docs), "localCheckpoint",
+                        lambda self, eager=True: self)
+    builders = {
+        "shingles": docs.select(dedup.shingles("text")),
+        "substring_span_dedup": dedup.substring_span_dedup(docs),
+        "window_dedup_stats": dedup.window_dedup_stats(docs),
+        "dup_ngram_fraction": textstats.dup_ngram_fraction(docs),
+        "winnowing_fingerprints": textstats.winnowing_fingerprints(docs),
+        "chunk_passages": textstats.chunk_passages(docs),
+        "_ngram_hashes": scrub._ngram_hashes(docs, "doc_id", "text", 8),
+    }
+    for name, df in builders.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, name
+        assert not [b for b in bodies if "split(" in b], (name, plan)
 
 
 def test_spread_keeps_column_pruning(spark):
