@@ -13,7 +13,9 @@ Scale notes (100 TB): exact dedup is a single hash aggregation on a
 64-128 bit key (shuffle on the digest, not the text). MinHash-LSH shuffles
 only (band_key, doc_id) pairs — bands-per-doc × rows — and joins within
 buckets, never all-pairs. SimHash groups by the 16-bit signature (or a
-prefix) so candidate generation is again a hash shuffle.
+prefix) so candidate generation is again a hash shuffle. The
+inverted-index pair generators share one seam: ``drop_hot_keys`` caps
+the keys, ``shared_key_pairs`` self-joins the (id, key) postings.
 """
 
 from __future__ import annotations
@@ -264,6 +266,65 @@ def minhash_signature(docs: DataFrame, id_col: str = "doc_id",
                        *[F.col(c) for c in extra])
 
 
+def sig_agreement(a: str, b: str, k: int) -> F.Column:
+    """Fraction of the k MinHash positions on which signature columns
+    ``a`` and ``b`` agree: the estimate of the two texts' shingle-set
+    Jaccard."""
+    matches = F.size(
+        F.filter(F.zip_with(a, b, lambda p, q: p == q), lambda v: v)
+    )
+    return matches / float(k)
+
+
+def drop_hot_keys(postings: DataFrame, key_cols: list[str],
+                  max_n: int) -> DataFrame:
+    """``postings`` without the keys held by more than ``max_n`` rows.
+
+    The cap that keeps an inverted-index self-join linear: a key held by
+    n rows yields n^2/2 candidate pairs, so one boilerplate key (a band
+    of a page crawled 10^7 times, a stop-shingle, a soft-404 digest)
+    would make the join quadratic, and such keys carry no pair signal.
+    With the cap the join costs at most ``max_n`` x |postings| pairs.
+    The size aggregation groups on the join key, so AQE reuses its
+    exchange for the self-join that follows."""
+    small = (
+        postings.groupBy(*key_cols)
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") <= max_n)
+        .select(*key_cols)
+    )
+    return postings.join(small, key_cols)
+
+
+def shared_key_pairs(postings: DataFrame, id_col: str,
+                     key_cols: list[str]) -> DataFrame:
+    """(a, b, n_shared): every pair of ids sharing at least one key, with
+    the number of keys they share; a < b, so each unordered pair once.
+
+    The candidate-pair seam of the dedup layer: one self equi-join of
+    the (id, key) postings on the key, never all-pairs, then one
+    aggregation on the pair. Callers that only need the pair set select
+    (a, b); the unused count is pruned and the aggregation plans as a
+    distinct. Precondition: postings are distinct on (id, key), else a
+    repeated posting inflates ``n_shared``. Cap hot keys with
+    ``drop_hot_keys`` first.
+
+    Self-joins that must carry a payload through the join (simhash's
+    chunk ints, ``ngram_jaccard_pairs``' word sets,
+    ``simsearch.semantic_dedup``'s vectors) and the two-sided
+    new-vs-corpus joins (``incremental_near_dup``, the stream-static
+    join of ``neardup_admission_stream``) stay written out: a payload is
+    not a key, and those joins never pair a side with itself."""
+    left = postings.select(F.col(id_col).alias("a"), *key_cols)
+    right = postings.select(F.col(id_col).alias("b"), *key_cols)
+    return (
+        left.join(right, key_cols)
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count("*").alias("n_shared"))
+    )
+
+
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", k: int = MINHASH_K,
                       bands: int = MINHASH_BANDS,
@@ -272,18 +333,17 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
 
     The signature splits into `bands` bands of k/bands rows; docs sharing
     any band key become candidates. Candidate generation shuffles ONLY
-    (band_idx, band_key, id) long-format rows — one self-join keyed on the
-    band, never all-pairs, and never carrying the k-wide signature through
-    the band join. Signatures are joined back onto the (distinct) candidate
-    pairs to compute sim_est = fraction of matching minhashes.
+    (band_idx, band_key, id) long-format rows — ``shared_key_pairs`` keyed
+    on the band, never all-pairs, and never carrying the k-wide
+    signature through the band join. Signatures are joined back onto
+    the (distinct) candidate pairs to compute sim_est = fraction of
+    matching minhashes (``sig_agreement``).
 
-    `max_bucket` bounds the quadratic band-bucket blowup on dup-heavy
-    corpora: buckets larger than the cap are dropped from candidate
-    generation (they are overwhelmingly exact-duplicate clusters, which
-    belong to exact_dedup / near_dup_pairs_dedup_first — composing
-    exact-dedup FIRST is the preferred fix; the cap is the backstop).
-    The size aggregation groups on the same (band_idx, band_key) as the
-    pair join, so AQE reuses the exchange rather than adding a shuffle."""
+    `max_bucket` drops band buckets larger than the cap
+    (``drop_hot_keys``): on dup-heavy corpora they are overwhelmingly
+    exact-duplicate clusters, which belong to exact_dedup /
+    near_dup_pairs_dedup_first — composing exact-dedup FIRST is the
+    preferred fix; the cap is the backstop."""
     # The signature frame feeds THREE consumers (band explode + both
     # sides of the verify join); a lazy localCheckpoint computes the
     # (id, 64-long) table once — at production this is exactly the
@@ -291,31 +351,16 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     sig = minhash_signature(docs, id_col, text_col, k).localCheckpoint(
         eager=False
     )
+    band = ["band_idx", "band_key"]
     banded = banded_sigs(sig, "doc", id_col=id_col, k=k,
-                         bands=bands).select("doc_id", "band_idx", "band_key")
+                         bands=bands).select("doc_id", *band)
     if max_bucket is not None:
-        small = (
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(small, ["band_idx", "band_key"])
-    left = banded.select(F.col("doc_id").alias("a"), "band_idx", "band_key")
-    right = banded.select(F.col("doc_id").alias("b"), "band_idx", "band_key")
-    cand = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+        banded = drop_hot_keys(banded, band, max_bucket)
+    cand = shared_key_pairs(banded, "doc_id", band).select("a", "b")
     sa = sig.select(F.col(id_col).alias("a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col(id_col).alias("b"), F.col("sig").alias("sb"))
-    matches = F.size(
-        F.filter(F.zip_with("sa", "sb", lambda p, q: p == q), lambda v: v)
-    )
     return cand.join(sa, "a").join(sb, "b").select(
-        "a", "b", (matches / float(k)).alias("sim_est")
+        "a", "b", sig_agreement("sa", "sb", k).alias("sim_est")
     )
 
 
@@ -335,10 +380,10 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
     skew, short docs, coefficient luck) is measured, not assumed.
 
     Evaluation-pair sample: pairs sharing at least one shingle with
-    document frequency <= max_df (the stop-shingle cap bounds the
-    quadratic co-shingle join exactly as in containment_pairs; pairs
-    whose overlap is ONLY corpus-hot boilerplate shingles are excluded
-    from the sample, stated bias). Exact Jaccard is computed over the
+    document frequency <= max_df (``drop_hot_keys`` then
+    ``shared_key_pairs``, as in containment_pairs; pairs whose overlap
+    is ONLY corpus-hot boilerplate shingles are excluded from the
+    sample, stated bias). Exact Jaccard is computed over the
     FULL distinct-shingle sets of the sampled pairs. At production this
     runs on a deterministic md5 document sample, not the corpus — the
     curve needs thousands of pairs, not 10^12.
@@ -357,10 +402,9 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
     4 dp, theory_rate 4 dp) ordered by bucket; empty buckets absent.
 
     Scale shape: one distinct-shingle explode + df-capped self-join
-    (the containment_pairs bound), one k-wide signature aggregation
-    (shared plan with the production generator), one in-row band
-    comparison, one bucket aggregation. No windows, no corpus-wide
-    all-pairs.
+    (the containment_pairs bound), one signature projection (the
+    production generator's), one in-row band comparison, one bucket
+    aggregation. No windows, no corpus-wide all-pairs.
     """
     from functools import reduce as _reduce
 
@@ -381,19 +425,9 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
         F.explode(F.array_distinct(shingles(text_col))).alias("sh"),
     ).localCheckpoint(eager=False)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    rare = (
-        sh.groupBy("sh").agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("sh")
-    )
-    capped = sh.join(rare, "sh")
-    pairs = (
-        capped.select(F.col("id").alias("a"), "sh")
-        .join(capped.select(F.col("id").alias("b"), "sh"), "sh")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    pairs = shared_key_pairs(
+        drop_hot_keys(sh, ["sh"], max_df), "id", ["sh"]
+    ).select("a", "b")
     if pair_mod > 1:
         # deterministic md5 pair sample: the curve needs thousands of
         # pairs per bucket, not all of them — this is the knob that
@@ -414,13 +448,8 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
         .union(pairs.select(F.col("b").alias("id")))
         .distinct()
     )
-    sh_m = sh.join(members, "id")
-    inter = (
-        sh_m.select(F.col("id").alias("a"), "sh")
-        .join(sh_m.select(F.col("id").alias("b"), "sh"), "sh")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
+    inter = shared_key_pairs(sh.join(members, "id"), "id", ["sh"]).select(
+        "a", "b", F.col("n_shared").alias("inter")
     )
     jac = (
         pairs.join(inter, ["a", "b"])
@@ -510,6 +539,18 @@ def near_dup_pairs_dedup_first(docs: DataFrame, id_col: str = "doc_id",
 
     Returns (a, b, sim_est, n_copies_a, n_copies_b), a/b representative
     ids with a < b."""
+    return _on_representatives(
+        docs, id_col, text_col,
+        lambda reps: minhash_lsh_pairs(reps, id_col, text_col, k, bands),
+    ).select("a", "b", "sim_est", "n_copies_a", "n_copies_b")
+
+
+def _on_representatives(docs: DataFrame, id_col: str, text_col: str,
+                        pairs_of: Callable[[DataFrame], DataFrame]
+                        ) -> DataFrame:
+    """``pairs_of`` run on the exact-duplicate representatives only (the
+    min id of each md5 digest group), its (a, b, ...) rows joined with
+    each side's exact-copy multiplicity as n_copies_a / n_copies_b."""
     digest = F.md5(F.col(text_col)).alias("digest")
     # the digest-group table feeds the representative semi-join AND both
     # multiplicity attaches — one lazy checkpoint, three references
@@ -522,14 +563,11 @@ def near_dup_pairs_dedup_first(docs: DataFrame, id_col: str = "doc_id",
     reps = docs.join(
         groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
     )
-    pairs = minhash_lsh_pairs(reps, id_col, text_col, k, bands)
     na = groups.select(F.col("keeper").alias("a"),
                        F.col("n_copies").alias("n_copies_a"))
     nb = groups.select(F.col("keeper").alias("b"),
                        F.col("n_copies").alias("n_copies_b"))
-    return pairs.join(na, "a").join(nb, "b").select(
-        "a", "b", "sim_est", "n_copies_a", "n_copies_b"
-    )
+    return pairs_of(reps).join(na, "a").join(nb, "b")
 
 
 # Bloom hash family: multiply-add over the uint64 wrap of xxhash64, fixed
@@ -768,13 +806,12 @@ def simhash_hamming_pairs(docs: DataFrame, id_col: str = "doc_id",
     bucket-bounded, never all-pairs — and the exact Hamming distance
     (bit_count of xor per chunk) filters the survivors.
 
-    ``max_bucket`` mirrors ``minhash_lsh_pairs``'s dup-heavy guard:
-    (chunk_idx, chunk_val) buckets larger than the cap are dropped from
-    candidate generation — on a crawl corpus one boilerplate page with 10^7
-    exact copies puts all copies in the same four chunk buckets (a
-    10^14-pair join); such clusters belong to exact dedup, not LSH. The
-    bucket-size aggregation groups on the same key as the pair join, so
-    AQE reuses the exchange."""
+    ``max_bucket`` mirrors ``minhash_lsh_pairs``'s dup-heavy guard
+    (``drop_hot_keys`` on (chunk_idx, chunk_val)): one boilerplate page
+    with 10^7 exact copies puts all copies in the same four chunk
+    buckets; such clusters belong to exact dedup, not LSH. The band join
+    carries the chunk ints, so it is written out here rather than taken
+    from ``shared_key_pairs``."""
     sig = simhash64(docs, id_col, text_col)
     # carry the 4 chunk ints (tiny) through the band join so the signature
     # is never recomputed or re-joined; multi-chunk matches dedup at the end
@@ -784,13 +821,7 @@ def simhash_hamming_pairs(docs: DataFrame, id_col: str = "doc_id",
         F.posexplode(F.array("c0", "c1", "c2", "c3")).alias("chunk_idx", "chunk_val"),
     )
     if max_bucket is not None:
-        small = (
-            banded.groupBy("chunk_idx", "chunk_val")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket)
-            .select("chunk_idx", "chunk_val")
-        )
-        banded = banded.join(small, ["chunk_idx", "chunk_val"])
+        banded = drop_hot_keys(banded, ["chunk_idx", "chunk_val"], max_bucket)
     left = banded.select(
         F.col(id_col).alias("a"),
         *[F.col(f"c{t}").alias(f"a{t}") for t in range(4)],
@@ -826,26 +857,11 @@ def simhash_pairs_dedup_first(docs: DataFrame, id_col: str = "doc_id",
     the chunk buckets instead of a 10^14-pair join.
 
     Returns (a, b, hamming, n_copies_a, n_copies_b), a < b."""
-    digest = F.md5(F.col(text_col)).alias("digest")
-    # the digest-group table feeds the representative semi-join AND both
-    # multiplicity attaches — one lazy checkpoint, three references
-    groups = (
-        docs.select(F.col(id_col), digest)
-        .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies"))
-        .localCheckpoint(eager=False)
-    )
-    reps = docs.join(
-        groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    )
-    pairs = simhash_hamming_pairs(reps, id_col, text_col, max_hamming)
-    na = groups.select(F.col("keeper").alias("a"),
-                       F.col("n_copies").alias("n_copies_a"))
-    nb = groups.select(F.col("keeper").alias("b"),
-                       F.col("n_copies").alias("n_copies_b"))
-    return pairs.join(na, "a").join(nb, "b").select(
-        "a", "b", "hamming", "n_copies_a", "n_copies_b"
-    )
+    return _on_representatives(
+        docs, id_col, text_col,
+        lambda reps: simhash_hamming_pairs(reps, id_col, text_col,
+                                           max_hamming),
+    ).select("a", "b", "hamming", "n_copies_a", "n_copies_b")
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
@@ -1438,12 +1454,10 @@ def winnowing_pairs(docs: DataFrame, k: int = 4, w: int = 5,
     of the full gram table (the reason MOSS scales where raw gram
     intersection does not).
 
-    Scale shape: the same equi-join discipline as minhash_lsh_pairs —
-    one self-join keyed on the fingerprint value, pair aggregation on
-    (a, b), never all-pairs. ``max_bucket`` drops fingerprints shared by
-    more docs than the cap (stop-phrase runs — they dominate cost and
-    carry no pair signal; the cap aggregation groups on the join key so
-    AQE reuses the exchange).
+    Scale shape: ``shared_key_pairs`` on the (id, fingerprint) postings,
+    after ``drop_hot_keys`` removes fingerprints shared by more than
+    ``max_bucket`` docs (stop-phrase runs: they dominate cost and carry
+    no pair signal).
     """
     from .textstats import winnowing_fingerprints
 
@@ -1452,21 +1466,11 @@ def winnowing_pairs(docs: DataFrame, k: int = 4, w: int = 5,
     fps = winnowing_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col
     ).select(id_col, "fp").distinct().localCheckpoint(eager=False)
-    small = (
-        fps.groupBy("fp").agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .select("fp")
-    )
-    fps = fps.join(small, "fp")
-    left = fps.select(F.col(id_col).alias("a"), "fp")
-    right = fps.select(F.col(id_col).alias("b"), "fp")
-    return (
-        left.join(right, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("int").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    pairs = shared_key_pairs(drop_hot_keys(fps, ["fp"], max_bucket),
+                             id_col, ["fp"])
+    return pairs.select(
+        "a", "b", F.col("n_shared").cast("int").alias("n_shared")
+    ).filter(F.col("n_shared") >= min_shared)
 
 
 def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -1482,26 +1486,22 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     contained side (it adds no novel text); MinHash/SimHash would keep
     both.
 
-    Candidate generation is an inverted-index equi-join on the shingle
-    with a document-frequency cap: shingles appearing in more than
-    ``max_df`` docs (boilerplate phrases — the web's stop-shingles) are
-    dropped BEFORE the self-join, which is what bounds the join fan-out:
-    cost <= sum over kept shingles of df^2 <= max_df * |postings|,
-    linear in corpus size for fixed max_df. Containment is then computed
-    over the CAPPED shingle space (numerator and denominator drop the
-    same stop-shingles — the MOSS/winnowing convention), so the metric
-    stays a true ratio in [0, 1] and boilerplate cannot inflate it.
+    Candidate generation is ``shared_key_pairs`` on the shingle postings
+    after ``drop_hot_keys`` removes shingles appearing in more than
+    ``max_df`` docs (boilerplate phrases — the web's stop-shingles), so
+    the join fan-out is linear in corpus size for fixed max_df.
+    Containment is then computed over the CAPPED shingle space
+    (numerator and denominator drop the same stop-shingles — the
+    MOSS/winnowing convention), so the metric stays a true ratio in
+    [0, 1] and boilerplate cannot inflate it.
 
     Returns (a, b, n_common, containment_a, containment_b, jaccard) for
     unordered pairs a < b where max(c_a, c_b) >= threshold on the
     UNROUNDED value; emitted ratios rounded 4 dp. Both directions are
     reported from the one unordered pair — the join never runs twice.
 
-    Scale: two hash aggregations (per-doc distinct shingles ride the
-    explode; df count is map-side partial), one self-equi-join on the
-    capped shingle, one pair aggregation. No windows, no cartesian; a
-    hot shingle is impossible by the df cap. Reference analog: none
-    (pipeline extension, like minhash_lsh_pairs above).
+    Reference analog: none (pipeline extension, like minhash_lsh_pairs
+    above).
     """
     # The distinct-shingle posting list feeds the df count AND the capped
     # join; the capped postings feed the per-doc sizes AND both self-join
@@ -1512,19 +1512,10 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(shingles(text_col, n))).alias("sh"),
     ).localCheckpoint(eager=False)
-    dfc = sh.groupBy("sh").agg(F.count("*").alias("df"))
-    kept = sh.join(
-        dfc.filter(F.col("df") <= max_df).select("sh"), "sh"
-    ).localCheckpoint(eager=False)
+    kept = drop_hot_keys(sh, ["sh"], max_df).localCheckpoint(eager=False)
     sizes = kept.groupBy("id").agg(F.count("*").alias("n_sh"))
-    pairs = (
-        kept.alias("l")
-        .join(kept.alias("r"), "sh")
-        .filter(F.col("l.id") < F.col("r.id"))
-        .groupBy(
-            F.col("l.id").alias("a"), F.col("r.id").alias("b")
-        )
-        .agg(F.count("*").alias("n_common"))
+    pairs = shared_key_pairs(kept, "id", ["sh"]).withColumnRenamed(
+        "n_shared", "n_common"
     )
     sa = sizes.select(F.col("id").alias("a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("id").alias("b"), F.col("n_sh").alias("n_b"))
@@ -1642,11 +1633,7 @@ def incremental_near_dup(new_docs: DataFrame, corpus: DataFrame,
         .join(sc.select(F.col(id_col).alias("corpus_id"),
                         F.col("sig").alias("corpus_sig")), "corpus_id")
     )
-    matches = F.size(F.filter(
-        F.zip_with("new_sig", "corpus_sig", lambda p, q: p == q),
-        lambda v: v,
-    ))
-    sim = matches / float(k)
+    sim = sig_agreement("new_sig", "corpus_sig", k)
     return (
         cand.select("new_id", "corpus_id", sim.alias("sim_raw"))
         .filter(F.col("sim_raw") >= threshold)
@@ -1740,14 +1727,11 @@ def mirror_hosts(pages: DataFrame, host_col: str = "host",
     ftp.example.org, a whole tier above document dedup (which would
     still fetch every mirrored page before discarding it).
 
-    Candidate generation is the inverted-index equi-join on digest —
-    never host x host — with the stop-digest cap from containment_pairs:
-    a digest served by more than ``max_hosts_per_digest`` hosts is
-    boilerplate (empty page, soft-404 template) and generates
-    cap-squared candidates for zero mirror signal, so it is dropped
-    BEFORE the join (fail-open: capped digests can only lower
-    overlap_frac, never fabricate a mirror). Pair counts aggregate on
-    (host_a, host_b) — bounded by true shared mass, not corpus size.
+    Candidate generation is ``shared_key_pairs`` on the (host, digest)
+    postings — never host x host — after ``drop_hot_keys`` removes
+    digests served by more than ``max_hosts_per_digest`` hosts
+    (boilerplate: empty page, soft-404 template; fail-open: capped
+    digests can only lower overlap_frac, never fabricate a mirror).
     Host sizes come from the UNCAPPED distinct sets, so the containment
     denominator stays honest.
 
@@ -1760,19 +1744,10 @@ def mirror_hosts(pages: DataFrame, host_col: str = "host",
         F.col(host_col).alias("host"), F.col(digest_col).alias("d")
     ).distinct()
     sizes = hd.groupBy("host").agg(F.count("*").alias("n"))
-    keep_d = (
-        hd.groupBy("d").agg(F.count("*").alias("nh"))
-        .filter(F.col("nh") <= max_hosts_per_digest)
-        .select("d")
-    )
-    capped = hd.join(keep_d, "d")
-    pairs = (
-        capped.select("d", F.col("host").alias("host_a"))
-        .join(capped.select("d", F.col("host").alias("host_b")), "d")
-        .filter(F.col("host_a") < F.col("host_b"))
-        .groupBy("host_a", "host_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
+    pairs = shared_key_pairs(
+        drop_hot_keys(hd, ["d"], max_hosts_per_digest), "host", ["d"]
+    ).select(F.col("a").alias("host_a"), F.col("b").alias("host_b"),
+             "n_shared")
     frac = F.col("n_shared") / F.least("na", "nb")
     return (
         pairs

@@ -32,10 +32,12 @@ def pagerank(links: DataFrame, iters: int = 3, damping: float = DAMPING,
     rows max, it does on big executors; Spark falls back to sort-merge
     when not), aggregate contributions by dst, left-join back to the host
     list. The edge table partitioning on src is reused every iteration.
-    Fixed unrolled iterations keep ONE Catalyst plan (no driver loop
-    state); production convergence loops would localCheckpoint every few
-    iterations to cut lineage — exactly the pattern already used in
-    dedup.connected_components.
+    The iterations are a driver loop: one driver action, ``hosts.count()``
+    (the host count is the only scalar driver state), and a lazy
+    ``localCheckpoint`` of ``ranks`` on every iteration, so each
+    iteration's plan starts from the previous ranks instead of nesting
+    all earlier iterations. ``pagerank_converged`` is the convergence-loop
+    form.
     """
     # Lazy plan truncation before the loop (the hits / trustrank /
     # connected_components lesson): the degree-annotated edge frame and

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.operators.dedup import shared_key_pairs
 
 
 def _to_double(col) -> F.Column:
@@ -378,7 +379,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.99,
     exists in `emb` (test fixtures that need guaranteed near-dups inject
     clones in the query layer, like queries._cloned_docs). Each vector is
     assigned to its ``nprobe`` nearest centroids by projection; candidate
-    pairs are an EQUI-join on centroid_id (a < b, deduped), then the exact
+    pairs are ``dedup.shared_key_pairs`` on centroid_id, then the exact
     cosine filters at `threshold`. Multi-probe closes the single-bucket
     recall hole: a pair straddling a centroid boundary (each member's
     argmin flips to a different centroid) still shares its second-nearest
@@ -402,14 +403,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.99,
     # BEFORE attaching vectors: the dim-wide cosine is computed exactly
     # once per unique candidate (same shape as minhash_lsh_pairs)
     buckets = prepped.select("a", F.explode(probes).alias("centroid_id"))
-    cand = (
-        buckets.join(
-            buckets.select(F.col("a").alias("b"), "centroid_id"), "centroid_id"
-        )
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand = shared_key_pairs(buckets, "a", ["centroid_id"]).select("a", "b")
     vecs = prepped.select("a", "va", F.sqrt(F.col("_vv")).alias("norm"))
     pairs = cand.join(vecs, "a").join(
         vecs.select(

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
-from ocr_cezam_spark.operators.dedup import with_words
+from ocr_cezam_spark.operators.dedup import _words, with_words
 
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is")
 
@@ -21,10 +21,6 @@ LANG_MARKERS = {
     "de": ("der", "die", "das", "und", "ist"),
     "fr": ("le", "la", "de", "et", "est"),
 }
-
-
-def _words(text_col: str) -> F.Column:
-    return F.split(F.col(text_col), " ")
 
 
 def token_quality(docs: DataFrame, id_col: str = "doc_id",

@@ -33,6 +33,7 @@ from ocr_cezam_spark.operators.dedup import (
     MINHASH_K,
     banded_sigs,
     minhash_signature,
+    sig_agreement,
 )
 
 
@@ -60,11 +61,7 @@ def neardup_admission_stream(new_docs: DataFrame, corpus_bands: DataFrame,
     sig = minhash_signature(new_docs, id_col, text_col, k, extra=(ts_col,))
     nb = banded_sigs(sig, "new", id_col=id_col, k=k, bands=bands,
                      extra=(ts_col,))
-    matches = F.size(F.filter(
-        F.zip_with("new_sig", "corpus_sig", lambda p, q: p == q),
-        lambda v: v,
-    ))
-    sim = matches / float(k)
+    sim = sig_agreement("new_sig", "corpus_sig", k)
     return (
         nb.withWatermark(ts_col, watermark)
         .join(corpus_bands, ["band_idx", "band_key"])
