@@ -2,8 +2,8 @@
 individual operators (paragraph-level boilerplate dedup, exact document
 dedup, token/Gopher quality gates) chained into ONE declarative plan that
 Catalyst optimizes as a whole. No collects, no barriers: the paragraph
-frequency aggregation, the digest keeper aggregation and the two quality
-projections all pipeline; at 100 TB the only shuffles are the three key
+frequency aggregation, the digest keeper aggregation and the one quality-gate
+projection all pipeline; at 100 TB the only shuffles are the three key
 aggregations/joins (paragraph digest, doc digest, doc id).
 
 Order matters and mirrors production pipelines (C4, CCNet, RefinedWeb):
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from .dedup import paragraph_dedup
-from .textstats import gopher_quality, token_quality
+from .textstats import _gopher_stats, _token_stats
 
 
 def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -31,15 +31,22 @@ def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
     stats (doc id, n_tokens, stopword_ratio, avg_word_len, mean_word_len,
     alpha_word_frac); with ``keep_text`` the cleaned text itself (the
     '\\n'-joined paragraph form) rides along for downstream composition
-    (build_training_corpus) instead of being re-derived."""
+    (build_training_corpus) instead of being re-derived. With unique ids
+    the output holds one document per cleaned-text md5.
+
+    Both gates are ONE filter + projection over the representatives,
+    built from the same Column builders as textstats.token_quality and
+    textstats.gopher_quality: a document survives iff token_quality's
+    ``quality_ok`` and gopher_quality's ``passes`` are both 1 on its
+    flattened text, with no join between the two gates or back to the
+    text."""
     cleaned = paragraph_dedup(docs, id_col, text_col, max_freq)
-    # c feeds the keeper aggregation and the representative semi-join;
-    # reps feeds both quality gates and the keep_text join. Lazy
-    # checkpoints compute each frontier once — and, as important at this
-    # plan size, keep every downstream stage from re-EMBEDDING (and
-    # re-analyzing) the whole paragraph-dedup subtree per reference:
-    # Catalyst analysis of the un-truncated composition measurably
-    # dominated construction (guide sections 3.3 and 7.3).
+    # c feeds the keeper aggregation and the representative semi-join. A
+    # lazy checkpoint computes that frontier once — and, as important at
+    # this plan size, keeps both consumers from re-EMBEDDING (and
+    # re-analyzing) the whole paragraph-dedup subtree: Catalyst analysis
+    # of the un-truncated composition measurably dominated construction
+    # (guide sections 3.3 and 7.3).
     c = cleaned.filter(F.col("text_dedup") != "").select(
         F.col(id_col), F.col("text_dedup").alias(text_col)
     ).localCheckpoint(eager=False)
@@ -50,23 +57,23 @@ def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
     )
     reps = c.join(
         keepers.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
-    ).localCheckpoint(eager=False)
+    )
     # The quality gates tokenize on single spaces; the reassembled text
     # joins paragraphs with '\n', which would otherwise merge the words
     # around every boundary into one token (and count the newline as a
     # word character). Dedup keeps the '\n' form — layout is part of
     # content identity — only the stats input flattens separators.
-    gated = reps.withColumn(text_col, F.translate(F.col(text_col), "\n", " "))
-    tq = token_quality(gated, id_col, text_col).filter(
-        F.col("quality_ok") == 1
-    ).select(id_col, "n_tokens", "stopword_ratio", "avg_word_len")
-    gq = gopher_quality(gated, id_col, text_col).filter(
-        F.col("passes") == 1
-    ).select(id_col, "mean_word_len", "alpha_word_frac")
-    out = tq.join(gq, id_col)
-    if keep_text:
-        out = out.join(reps, id_col)
-    return out
+    flat = F.translate(F.col(text_col), "\n", " ")
+    tq, gq = _token_stats(flat), _gopher_stats(flat)
+    return reps.filter(
+        (tq["quality_ok"] == 1) & (gq["passes"] == 1)
+    ).select(
+        F.col(id_col),
+        *(tq[n].alias(n) for n in ("n_tokens", "stopword_ratio",
+                                   "avg_word_len")),
+        *(gq[n].alias(n) for n in ("mean_word_len", "alpha_word_frac")),
+        *([F.col(text_col)] if keep_text else []),
+    )
 
 
 def frontier_next(links: DataFrame, crawled: DataFrame, robots: DataFrame,
@@ -181,6 +188,25 @@ def fetch_schedule(frontier: DataFrame, n_workers: int = 4) -> DataFrame:
     ).orderBy("url")
 
 
+def _with_near_dup_component(docs: DataFrame, id_col: str,
+                             text_col: str) -> DataFrame:
+    """``docs`` plus cluster_members' near-dup ``component``, for input
+    that holds ONE row per text md5 (build_training_corpus' stage 2):
+    MinHash-LSH pairs (sim_est >= 0.5) -> connected components, every id
+    outside a pair its own component. On such input cluster_members'
+    exact-duplicate collapse is the identity, so the component per id
+    is the same (tests/test_btc_once.py)."""
+    from .dedup import connected_components, minhash_lsh_pairs
+
+    pairs = minhash_lsh_pairs(docs, id_col, text_col).filter(
+        F.col("sim_est") >= 0.5
+    )
+    comp = connected_components(pairs).withColumnRenamed("node", id_col)
+    return docs.join(comp, id_col, "left").withColumn(
+        "component", F.coalesce("component", id_col)
+    )
+
+
 def build_training_corpus(docs: DataFrame, budget_tokens: int,
                           pack: int = 512, n_shards: int = 8,
                           dsir_k: int = 100, max_freq: int = 5,
@@ -192,27 +218,36 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     semantics generalized: the two-phase admit-then-extract contract of
     file_types/file_type.py:23-39 — admit a document, then process only
     what was admitted — applied stage over stage to corpus curation.)
+    Precondition: ``id_col`` is unique in ``docs``.
 
     1. clean_corpus: boilerplate-paragraph dedup, exact-doc dedup on
-       cleaned text, token + Gopher word gates (keep_text=True — the
-       cleaned '\\n' form feeds everything downstream);
-    2. near-dup keep-BEST: cluster_members' dup-heavy-safe clustering
-       (exact collapse -> LSH -> connected components), then one
-       max-of-(quality, -id) struct per component — every component
-       including singletons, so this stage IS the near-dup dedup, with
-       the best-quality member (ties to min id) as the survivor;
+       cleaned text, token + Gopher word gates in one pass (keep_text=
+       True — the cleaned '\\n' form feeds everything downstream);
+    2. near-dup keep-BEST: MinHash-LSH pairs (sim_est >= 0.5) and
+       connected components over the cleaned docs, every doc outside a
+       pair its own component; then one max-of-(quality, -id) struct
+       per component — every component including singletons, so this
+       stage IS the near-dup dedup, with the best-quality member (ties
+       to min id) as the survivor. This is cluster_members' clustering
+       minus its exact-duplicate collapse: with unique ids, stage 1
+       leaves ONE document per cleaned-text md5 (the min-id keeper of
+       each digest), so every digest group is a singleton, the
+       representative semi-join keeps every row and the digest
+       re-attach maps each id to its own component — no work to do;
     3. substring_span_dedup: cross-doc duplicated n-gram RUNS removed
        from the surviving text (boilerplate whole-doc dedup can't touch;
        docs cleaned to '' drop out). Newlines survive inside the
        space-joined words, so the line structure reaches stage 4;
     4. gopher_line_quality gate over the span-cleaned text (the line
-       gates need the '\\n' structure stage 3 preserved);
+       gates need the '\\n' structure stage 3 preserved), applied as a
+       filter on its ``passes`` expression;
     5. dsir_select: importance-rank the surviving RAW docs against the
        surviving trusted-target docs (``target_col``), keep top
        ``dsir_k``;
     6. select_and_pack: fill ``budget_tokens`` with the best survivors
        (distributed banded prefix sum) and lay them into ``pack``-token
-       training packs across ``n_shards`` shards.
+       training packs across ``n_shards`` shards, packing the
+       selection's own token counts.
 
     Output: (id, shard, n_tokens, pack_id, offset_in_pack) — the final
     batch layout, one row per packed document.
@@ -226,18 +261,20 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     collects each launch jobs that would otherwise recompute paragraph
     dedup + minhash from the raw scan), and — the one that actually
     kills the un-checkpointed composition — LOGICAL PLAN blowup: every
-    stage references its input 3-5 times (span dedup alone joins its
-    source five ways), so the un-truncated tree multiplies stage over
-    stage (5x3x2x5x4 copies of the base subtree by the packer) and
-    Catalyst spends minutes ANALYZING, not executing. persist() does
-    not truncate lineage for planning; localCheckpoint does. At
-    production these frontiers are exactly the intermediate tables a
-    multi-day build writes to scratch storage anyway — same shape, same
-    bound (the corpus itself, once per stage boundary).
+    stage references its input several times (span dedup alone joins
+    its source five ways), so the un-truncated tree multiplies stage
+    over stage and Catalyst spends minutes ANALYZING, not executing.
+    persist() does not truncate lineage for planning; localCheckpoint
+    does. At production these frontiers are exactly the intermediate
+    tables a multi-day build writes to scratch storage anyway — same
+    shape, same bound (the corpus itself, once per stage boundary).
+    Each stage runs once: the DSIR selection is computed by the
+    token-budget pass's band-totals job and packed from its
+    checkpoint, not re-run by the write.
     """
-    from .dedup import cluster_members, substring_span_dedup
+    from .dedup import substring_span_dedup
     from .sampling import doc_quality, dsir_select, select_and_pack
-    from .textstats import gopher_line_quality
+    from .textstats import _gopher_line_stats
 
     # The raw input is referenced by stage 1 AND by the stage-5 target
     # flag join; the caller's fixture subtree can itself be a deep plan,
@@ -247,11 +284,8 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     cleaned = clean_corpus(docs, id_col, text_col, max_freq,
                            keep_text=True).select(id_col, text_col)
     cleaned = cleaned.localCheckpoint(eager=False)
-    members = cluster_members(cleaned, id_col, text_col)
-    scored = members.join(
-        cleaned.select(F.col(id_col),
-                       doc_quality(cleaned, text_col).alias("q")),
-        id_col,
+    scored = _with_near_dup_component(cleaned, id_col, text_col).select(
+        id_col, doc_quality(cleaned, text_col).alias("q"), "component"
     )
     best = F.max(F.struct(F.col("q"), (-F.col(id_col)).alias("nid")))
     kept_ids = (
@@ -261,16 +295,13 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     kept = cleaned.join(kept_ids, id_col, "left_semi").localCheckpoint(
         eager=False
     )
-    span = (
+    line_ok = _gopher_line_stats(F.col(text_col))["passes"] == 1
+    survivors = (
         substring_span_dedup(kept, id_col=id_col, text_col=text_col)
         .filter(F.col("clean_text") != "")
         .select(F.col(id_col), F.col("clean_text").alias(text_col))
-    )
-    line_ok = gopher_line_quality(span, id_col, text_col).filter(
-        F.col("passes") == 1
-    ).select(id_col)
-    survivors = span.join(line_ok, id_col, "left_semi").localCheckpoint(
-        eager=False
+        .filter(line_ok)
+        .localCheckpoint(eager=False)
     )
     flagged = survivors.join(
         docs.select(F.col(id_col), F.col(target_col)), id_col

@@ -57,16 +57,19 @@ def token_budget_select(docs: DataFrame, budget: int,
     rows never enter the window sort. `offset <= budget` (not <) keeps
     the edge band whose first doc may still land exactly on the budget.
 
-    The narrow (id, n_tokens, quality, band) projection is persisted
-    (MEMORY_AND_DISK) before the band-totals pass: the totals collect and
-    the window pass would otherwise each re-read AND re-tokenize the full
-    corpus — tokenization dominates, so the double scan doubled the
-    operator's cost. ~32 bytes/doc of bounded intermediate state spills
-    to executor disk at scale; at production you'd write the projection
-    to a scratch table instead, which is the same shape. The band-pruning
-    filter is a literal map over `band`, so it still pushes below the
-    window's exchange — pruned bands are never shuffled, only read from
-    the materialized projection. (A single-job alternative — broadcast-
+    The narrow (id, n_tokens, quality, band) projection is lazily
+    localCheckpoint'ed before the band-totals pass: the totals collect
+    and the window pass would otherwise each re-read AND re-tokenize the
+    full corpus (and re-run whatever plan produced ``docs``) —
+    tokenization dominates, so the double scan doubled the operator's
+    cost. The totals collect materializes ~32 bytes/doc of bounded
+    intermediate state in executor block storage, the window pass reads
+    it back; unlike persist() it leaves no entry in the session's cache
+    manager. At production you'd write the projection to a scratch table
+    instead, which is the same shape. The band-pruning filter is a
+    literal map over `band`, so it still pushes below the window's
+    exchange — pruned bands are never shuffled, only read from the
+    materialized projection. (A single-job alternative — broadcast-
     joining the offsets and sharing one repartition-by-band exchange via
     ReuseExchange — was rejected: it defeats map-side partial aggregation
     and shuffles 100% of rows, where this shape shuffles only the kept
@@ -75,8 +78,6 @@ def token_budget_select(docs: DataFrame, budget: int,
     Output: (id, n_tokens, quality, cum_tokens) for selected docs, where
     cum_tokens is the inclusive running total in global order.
     """
-    from pyspark import StorageLevel
-
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     base = docs.select(
         F.col(id_col),
@@ -86,7 +87,7 @@ def token_budget_select(docs: DataFrame, budget: int,
         "band",
         F.least(F.floor(F.col("quality") * n_buckets).cast("int"),
                 F.lit(n_buckets - 1)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     per_band = {
         r["band"]: r["toks"]
         for r in base.groupBy("band").agg(F.sum("n_tokens").alias("toks"))
@@ -329,21 +330,26 @@ def select_and_pack(docs: DataFrame, budget_tokens: int, pack: int = 512,
                     text_col: str = "text") -> DataFrame:
     """The composed data-selection tail of a training build: pick the
     best documents up to a global token budget (token_budget_select),
-    then lay the survivors into training packs (sequence_pack) — one
-    Catalyst plan from corpus to batch layout.
+    then lay the survivors into training packs (sequence_pack's layout)
+    — one Catalyst plan from corpus to batch layout.
+
+    The packer takes the selection's own (id, n_tokens) rows: the
+    selection already counts each document's tokens with the same
+    whitespace-filtered rule sequence_pack uses, so nothing joins back
+    to ``docs``. With unique ids the output equals
+    ``sequence_pack(docs ⋉ token_budget_select(docs))``, and ``docs`` is
+    read once — a semi-join back would re-run whatever plan produced
+    ``docs`` (DSIR, in build_training_corpus) when the result is written.
 
     Scale shape: the selection's per-band windows and the packer's
-    per-shard windows are both partitioned (no global window); the
-    semi-join between them is on the id key the packer re-partitions by
-    anyway.
+    per-shard windows are both partitioned (no global window), and the
+    plan has no join.
     """
-    from .textstats import sequence_pack
+    from .textstats import _pack_counts
 
     sel = token_budget_select(docs, budget_tokens, id_col=id_col,
                               text_col=text_col)
-    chosen = docs.join(sel.select(id_col), id_col, "left_semi")
-    return sequence_pack(chosen, budget=pack, n_shards=n_shards,
-                         id_col=id_col, text_col=text_col)
+    return _pack_counts(sel, pack, n_shards, id_col)
 
 
 def dsir_select(docs: DataFrame, k: int = 100, n_buckets: int = 1024,
@@ -379,10 +385,12 @@ def dsir_select(docs: DataFrame, k: int = 100, n_buckets: int = 1024,
     emitted value, engine-stable.
 
     Scale shape: token explode aggregates to (doc, bucket) counts
-    map-side; the two bucket tables are n_buckets rows — broadcast joins
-    by construction; totals ride single-row broadcast crossJoins; the
-    final top-k is a TakeOrdered, never a full sort. The 100-TB corpus
-    never shuffles except the (doc, bucket) aggregation.
+    map-side; ONE n_buckets-row model table carries both class counts
+    (c_tgt, c_raw — one groupBy(bucket) with a conditional sum per
+    class) and rides a broadcast join; the two totals come from one
+    aggregation of that table and ride a single-row broadcast crossJoin;
+    the final top-k is a TakeOrdered, never a full sort. The 100-TB
+    corpus never shuffles except the (doc, bucket) aggregation.
     """
     bucket = (
         F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10)
@@ -400,22 +408,19 @@ def dsir_select(docs: DataFrame, k: int = 100, n_buckets: int = 1024,
         toks.groupBy(id_col, target_col, "bucket")
         .agg(F.count("*").alias("tf"))
     )
-    tgt = (
-        doc_b.filter(F.col(target_col))
-        .groupBy("bucket").agg(F.sum("tf").alias("c_tgt"))
+    is_tgt = F.col(target_col)
+    model = doc_b.groupBy("bucket").agg(
+        F.sum(F.when(is_tgt, F.col("tf"))).alias("c_tgt"),
+        F.sum(F.when(~is_tgt, F.col("tf"))).alias("c_raw"),
     )
-    raw = (
-        doc_b.filter(~F.col(target_col))
-        .groupBy("bucket").agg(F.sum("tf").alias("c_raw"))
+    totals = model.agg(
+        F.sum("c_tgt").cast("double").alias("t_tgt"),
+        F.sum("c_raw").cast("double").alias("t_raw"),
     )
-    tgt_tot = tgt.agg(F.sum("c_tgt").cast("double").alias("t_tgt"))
-    raw_tot = raw.agg(F.sum("c_raw").cast("double").alias("t_raw"))
     scored = (
-        doc_b.filter(~F.col(target_col))
-        .join(F.broadcast(tgt), "bucket", "left")
-        .join(F.broadcast(raw), "bucket", "left")
-        .crossJoin(F.broadcast(tgt_tot))
-        .crossJoin(F.broadcast(raw_tot))
+        doc_b.filter(~is_tgt)
+        .join(F.broadcast(model), "bucket")
+        .crossJoin(F.broadcast(totals))
         .groupBy(id_col)
         .agg(
             F.sum("tf").alias("n_tokens"),

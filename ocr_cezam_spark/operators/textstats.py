@@ -23,32 +23,40 @@ LANG_MARKERS = {
 }
 
 
+def _token_stats(text: F.Column) -> dict[str, F.Column]:
+    """token_quality's columns over ``text``, keyed by output name; the
+    gate is ``quality_ok``. Shared with pipeline.clean_corpus, which
+    computes this gate and gopher_quality's in one projection."""
+    words = F.split(text, " ")
+    n_tokens = F.size(words)
+    n_stop = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS_EN)))
+    n_chars = F.length(text)
+    avg_word_len = round_he((n_chars - (n_tokens - 1)) / n_tokens, 3)
+    return {
+        "n_tokens": n_tokens,
+        "n_stopwords": n_stop,
+        "stopword_ratio": round_he(n_stop / n_tokens, 3),
+        "avg_word_len": avg_word_len,
+        "quality_ok": (
+            (n_tokens >= 10)
+            & (avg_word_len >= 2.0)
+            & (avg_word_len <= 12.0)
+        ).cast("int"),
+    }
+
+
+def _named(stats: dict[str, F.Column]) -> list[F.Column]:
+    return [c.alias(name) for name, c in stats.items()]
+
+
 def token_quality(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
     """Token count + stopword ratio + length stats -> quality flag.
 
     The quality-score shape of web-pipeline filters (C4/Gopher-style rules)
     built from the reference's keyword-membership primitives (J3)."""
-    words = _words(text_col)
-    n_tokens = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS_EN)))
-    n_chars = F.length(F.col(text_col))
-    avg_word_len = round_he((n_chars - (n_tokens - 1)) / n_tokens, 3)
-    stop_ratio = round_he(n_stop / n_tokens, 3)
-    return docs.select(
-        F.col(id_col),
-        n_tokens.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        stop_ratio.alias("stopword_ratio"),
-        avg_word_len.alias("avg_word_len"),
-        (
-            (n_tokens >= 10)
-            & (avg_word_len >= 2.0)
-            & (avg_word_len <= 12.0)
-        )
-        .cast("int")
-        .alias("quality_ok"),
-    )
+    return docs.select(F.col(id_col),
+                       *_named(_token_stats(F.col(text_col))))
 
 
 def dup_ngram_fraction(docs: DataFrame, n: int = 3, min_docs: int = 2,
@@ -260,6 +268,33 @@ def source_skew_stats(docs: DataFrame, source_col: str = "source",
     )
 
 
+def _gopher_stats(text: F.Column) -> dict[str, F.Column]:
+    """gopher_quality's columns over ``text``, keyed by output name; the
+    gate is ``passes``. gopher_line_quality reuses the word-level pair
+    (mean_word_len, alpha_word_frac)."""
+    words = F.split(text, " ")
+    n_words = F.size(words)
+    total_chars = F.aggregate(
+        words, F.lit(0), lambda acc, w: acc + F.length(w)
+    )
+    n_alpha = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
+    n_digit = F.size(F.filter(words, lambda w: w.rlike("^[0-9]+$")))
+    mean_len = round_he(total_chars / n_words, 4)
+    alpha_frac = round_he(n_alpha / n_words, 4)
+    digit_frac = round_he(n_digit / n_words, 4)
+    return {
+        "n_words": n_words,
+        "mean_word_len": mean_len,
+        "alpha_word_frac": alpha_frac,
+        "digit_word_frac": digit_frac,
+        "passes": (
+            mean_len.between(3.0, 10.0)
+            & (alpha_frac >= 0.8)
+            & (digit_frac < 0.3)
+        ).cast("int"),
+    }
+
+
 def gopher_quality(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Gopher-style word-level quality gates (Rae et al. 2021 repetition/
@@ -274,29 +309,51 @@ def gopher_quality(docs: DataFrame, id_col: str = "doc_id",
     rules (bullet/ellipsis line fractions) need line structure the
     documents table doesn't carry; the extraction corpus path covers
     line-model analytics."""
-    words = _words(text_col)
-    n_words = F.size(words)
-    total_chars = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w)
-    )
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
-    n_digit = F.size(F.filter(words, lambda w: w.rlike("^[0-9]+$")))
-    mean_len = round_he(total_chars / n_words, 4)
-    alpha_frac = round_he(n_alpha / n_words, 4)
-    digit_frac = round_he(n_digit / n_words, 4)
-    passes = (
-        mean_len.between(3.0, 10.0)
-        & (alpha_frac >= 0.8)
-        & (digit_frac < 0.3)
-    ).cast("int")
-    return docs.select(
-        F.col(id_col),
-        n_words.alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        alpha_frac.alias("alpha_word_frac"),
-        digit_frac.alias("digit_word_frac"),
-        passes.alias("passes"),
-    )
+    return docs.select(F.col(id_col),
+                       *_named(_gopher_stats(F.col(text_col))))
+
+
+def _gopher_line_stats(text: F.Column) -> dict[str, F.Column]:
+    """gopher_line_quality's columns over ``text``, keyed by output name;
+    the gate is ``passes``. pipeline.build_training_corpus filters on
+    that gate directly."""
+    lines = F.split(text, "\n")
+    n_lines = F.size(lines)
+    n_bullet = F.size(F.filter(
+        lines, lambda l: l.rlike(r"^\s*([•‣▪]|[-*]\s)")))
+    n_ellipsis_line = F.size(F.filter(
+        lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
+    n_words = F.size(F.split(text, " "))
+    n_hash = (
+        F.length(text) - F.length(F.replace(text, F.lit("#")))
+    ).cast("double")
+    n_ellipsis_sym = (
+        (F.length(text) - F.length(F.replace(text, F.lit("...")))) / 3
+        + (F.length(text) - F.length(F.replace(text, F.lit("…"))))
+    ).cast("double")
+    bullet_frac = round_he(n_bullet / n_lines, 4)
+    ellipsis_frac = round_he(n_ellipsis_line / n_lines, 4)
+    hash_ratio = round_he(n_hash / n_words, 4)
+    ellipsis_ratio = round_he(n_ellipsis_sym / n_words, 4)
+    word = _gopher_stats(text)
+    mean_len, alpha_frac = word["mean_word_len"], word["alpha_word_frac"]
+    return {
+        "n_lines": n_lines.cast("int"),
+        "bullet_line_frac": bullet_frac,
+        "ellipsis_line_frac": ellipsis_frac,
+        "hash_word_ratio": hash_ratio,
+        "ellipsis_word_ratio": ellipsis_ratio,
+        "mean_word_len": mean_len,
+        "alpha_word_frac": alpha_frac,
+        "passes": (
+            (bullet_frac < 0.9)
+            & (ellipsis_frac < 0.3)
+            & (hash_ratio <= 0.1)
+            & (ellipsis_ratio <= 0.1)
+            & mean_len.between(3.0, 10.0)
+            & (alpha_frac >= 0.8)
+        ).cast("int"),
+    }
 
 
 def gopher_line_quality(docs: DataFrame, id_col: str = "url",
@@ -321,48 +378,8 @@ def gopher_line_quality(docs: DataFrame, id_col: str = "url",
     shuffle beyond the scan, so it runs at scan speed on 100 TB. Words
     split on ' ' (the engine-wide _words convention) so every fraction
     has an exact DuckDB twin."""
-    lines = F.split(F.col(text_col), "\n")
-    n_lines = F.size(lines)
-    n_bullet = F.size(F.filter(
-        lines, lambda l: l.rlike(r"^\s*([•‣▪]|[-*]\s)")))
-    n_ellipsis_line = F.size(F.filter(
-        lines, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-    words = _words(text_col)
-    n_words = F.size(words)
-    total_chars = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w))
-    n_alpha = F.size(F.filter(words, lambda w: w.rlike("[a-zA-Z]")))
-    t = F.col(text_col)
-    n_hash = (F.length(t) - F.length(F.replace(t, F.lit("#")))).cast("double")
-    n_ellipsis_sym = (
-        (F.length(t) - F.length(F.replace(t, F.lit("...")))) / 3
-        + (F.length(t) - F.length(F.replace(t, F.lit("…"))))
-    ).cast("double")
-    bullet_frac = round_he(n_bullet / n_lines, 4)
-    ellipsis_frac = round_he(n_ellipsis_line / n_lines, 4)
-    hash_ratio = round_he(n_hash / n_words, 4)
-    ellipsis_ratio = round_he(n_ellipsis_sym / n_words, 4)
-    mean_len = round_he(total_chars / n_words, 4)
-    alpha_frac = round_he(n_alpha / n_words, 4)
-    passes = (
-        (bullet_frac < 0.9)
-        & (ellipsis_frac < 0.3)
-        & (hash_ratio <= 0.1)
-        & (ellipsis_ratio <= 0.1)
-        & mean_len.between(3.0, 10.0)
-        & (alpha_frac >= 0.8)
-    ).cast("int")
-    return docs.select(
-        F.col(id_col),
-        n_lines.cast("int").alias("n_lines"),
-        bullet_frac.alias("bullet_line_frac"),
-        ellipsis_frac.alias("ellipsis_line_frac"),
-        hash_ratio.alias("hash_word_ratio"),
-        ellipsis_ratio.alias("ellipsis_word_ratio"),
-        mean_len.alias("mean_word_len"),
-        alpha_frac.alias("alpha_word_frac"),
-        passes.alias("passes"),
-    )
+    return docs.select(F.col(id_col),
+                       *_named(_gopher_line_stats(F.col(text_col))))
 
 
 def sequence_pack(docs: DataFrame, budget: int = 512, n_shards: int = 8,
@@ -382,16 +399,24 @@ def sequence_pack(docs: DataFrame, budget: int = 512, n_shards: int = 8,
     shards, matching how training data is sharded anyway).
 
     Returns (id, shard, n_tokens, pack_id, offset_in_pack)."""
-    from pyspark.sql import Window
+    # whitespace-FILTERED count, the one sampling.token_budget_select
+    # budgets with: a doc must occupy exactly the tokens it was budgeted
+    # at, or the select->pack composition over-packs on multi-space text
+    n_tokens = F.size(F.filter(_words(text_col), lambda w: w != ""))
+    return _pack_counts(
+        docs.select(F.col(id_col), n_tokens.alias("n_tokens")),
+        budget, n_shards, id_col,
+    )
 
-    base = docs.select(
+
+def _pack_counts(counts: DataFrame, budget: int, n_shards: int,
+                 id_col: str) -> DataFrame:
+    """sequence_pack's layout over precomputed (id, n_tokens) rows — the
+    one packer behind sequence_pack and sampling.select_and_pack."""
+    base = counts.select(
         F.col(id_col),
         F.pmod(F.col(id_col), F.lit(n_shards)).alias("shard"),
-        # whitespace-FILTERED count, matching sampling.token_budget_select:
-        # a doc must occupy exactly the tokens it was budgeted at, or the
-        # select->pack composition over-packs on multi-space text
-        F.size(F.filter(_words(text_col), lambda w: w != ""))
-        .cast("int").alias("n_tokens"),
+        F.col("n_tokens").cast("int").alias("n_tokens"),
     )
     w = Window.partitionBy("shard").orderBy(id_col)
     cum_before = F.sum("n_tokens").over(w) - F.col("n_tokens")
