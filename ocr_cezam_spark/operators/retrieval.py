@@ -1,19 +1,25 @@
-"""Lexical retrieval over the corpus: inverted-index statistics and BM25
-top-k scoring — the sparse complement to the dense ANN operators
-(simsearch.py / pq.py / hnsw.py).
+"""Lexical retrieval over the corpus: inverted-index statistics, BM25
+top-k scoring and exact phrase search — the sparse complement to the
+dense ANN operators (simsearch.py / pq.py / hnsw.py).
 
 Reference analog: ocr-cezam locates fields by keyword membership over
 per-document token sets (utils/utils.py:30-53 trigger lookups); at corpus
 scale the same capability is an inverted index + ranked retrieval.
 
+One implementation per algorithm. ``_bm25`` is the only BM25 scorer: it
+scores a (query_id, term, weight) table against (term, id, tf) postings,
+and the three BM25 entry points differ only in the postings they build
+and the top-k they take. ``phrase_search_multi`` is the only phrase
+matcher; ``phrase_search`` runs it on one phrase.
+
 Everything is native DataFrame ops: one explode to tokens, hash
-aggregations, a broadcast join against the (tiny) query term set. No
-UDFs, no driver-side loops.
+aggregations, broadcast joins against the (tiny) query table or a
+literal map for phrases. No UDFs, no driver-side loops.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
@@ -67,35 +73,28 @@ def inverted_index_stats(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
-              id_col: str = "doc_id", text_col: str = "text",
-              k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
-    """BM25 ranking of documents against a bag-of-terms query.
+def _bm25(postings: DataFrame, queries: DataFrame, id_col: str,
+          k1: float, b: float) -> DataFrame:
+    """Score every query against every document it matches:
+    (term, id, tf) postings x (query_id, term, weight) queries ->
+    (query_id, id, score, n_matched).
 
-    score(d) = sum over query terms t of
-        idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
-    with idf(t) = ln((N - df + 0.5) / (df + 0.5) + 1)  (Lucene form).
+    score = sum over the query's matching terms of
+        weight * idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
+    with idf(t) = ln((N - df + 0.5) / (df + 0.5) + 1)  (Lucene form),
+    score rounded half-even to 4 dp. ``queries`` must hold one row per
+    (query_id, term).
 
-    Scale shape: every consumer derives from ONE term_freqs aggregation —
-    doc lengths are sum(tf) per doc (no second corpus scan; N therefore
-    counts docs with at least one token, which is also the only kind that
-    can match), N/avgdl ride a 1-row broadcast crossJoin, and the query
-    term set broadcasts into a semi-join that prunes the scoring work to
-    |query| postings lists. The tf exchange is shared by the df/dl/score
-    branches (ReusedExchange under AQE — the same pattern the minhash
-    plan test asserts). Top-k is TakeOrdered (no global sort). Duplicate
-    query terms are deduplicated (a bag-of-terms query; weighted queries
-    would carry an explicit weight column instead of duplicates, which
-    would otherwise corrupt df).
-
-    Output: (id, score, n_matched) for the k best documents,
-    score rounded to 4 dp, ties broken by id ascending.
+    Scale shape: every branch derives from the ONE postings aggregation
+    (its exchange is shared — ReusedExchange under AQE). Doc lengths are
+    sum(tf) per doc, so N counts docs with at least one token, the only
+    kind that can match. df is a left-semi join of the postings against
+    the broadcast query table (no distinct over the queries, no extra
+    shuffle); N/avgdl ride a 1-row broadcast crossJoin; scoring joins
+    the postings to the broadcast query table — one row per (matching
+    term, doc, query) — and aggregates on (query_id, doc).
     """
-    tf = term_freqs(docs, id_col, text_col)
-    qt = tf.sparkSession.createDataFrame(
-        [(t,) for t in dict.fromkeys(query_terms)], ["term"]
-    )
-    dl = tf.groupBy(id_col).agg(
+    dl = postings.groupBy(id_col).agg(
         F.sum("tf").cast("double").alias("dl")
     )
     stats = dl.agg(
@@ -103,99 +102,70 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
         F.avg("dl").alias("avgdl"),
     )
     df_t = (
-        tf.join(F.broadcast(qt), "term")
+        postings.join(F.broadcast(queries), "term", "left_semi")
         .groupBy("term")
         .agg(F.count("*").cast("double").alias("df"))
     )
-    scored = (
-        tf.join(F.broadcast(qt), "term")
+    return (
+        postings.join(F.broadcast(queries), "term")
         .join(F.broadcast(df_t), "term")
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
         .select(
+            "query_id",
             F.col(id_col),
             (
-                F.log((F.col("n_docs") - F.col("df") + 0.5)
-                      / (F.col("df") + 0.5) + 1.0)
+                F.col("weight")
+                * F.log((F.col("n_docs") - F.col("df") + 0.5)
+                        / (F.col("df") + 0.5) + 1.0)
                 * (F.col("tf") * (k1 + 1))
                 / (F.col("tf")
                    + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
             ).alias("part"),
         )
-        .groupBy(id_col)
+        .groupBy("query_id", id_col)
         .agg(
             round_he(F.sum("part"), 4).alias("score"),
             F.count("*").alias("n_matched"),
         )
     )
+
+
+def _bm25_terms_topk(postings: DataFrame, query_terms: list[str], k: int,
+                     id_col: str, k1: float, b: float) -> DataFrame:
+    """One bag-of-terms query through ``_bm25``: the distinct terms as
+    query 0 at weight 1.0 (1.0 * idf is exact, so the scores equal an
+    unweighted sum), then a TakeOrdered top-k — (id, score, n_matched),
+    ties broken by id ascending."""
+    q = postings.sparkSession.createDataFrame(
+        [(t,) for t in dict.fromkeys(query_terms)], "term string"
+    ).select(F.lit(0).alias("query_id"), "term",
+             F.lit(1.0).alias("weight"))
     return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+        _bm25(postings, q, id_col, k1, b)
+        .select(id_col, "score", "n_matched")
+        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        .limit(k)
     )
 
 
-def phrase_search_multi(docs: DataFrame, phrases: list[str],
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
-    """Exact matching for MANY phrases in ONE job — the bm25_multi_topk
-    discipline applied to phrase_search: a decontamination or
-    quoted-query workload carries thousands of phrases, and looping the
-    single-phrase operator would scan the corpus once per phrase. The
-    (phrase_id, slot, term) table broadcasts into ONE semi-join against
-    the token stream; candidate alignments are (doc, phrase, start =
-    pos - slot); one hash aggregation counts distinct slots per
-    alignment and another rolls up per (doc, phrase). Identical
-    semantics to phrase_search per phrase (pytest-pinned), including
-    repeated-word phrases via slot-distinctness.
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
+              id_col: str = "doc_id", text_col: str = "text",
+              k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
+    """BM25 ranking of documents against a bag-of-terms query: the
+    multi-query scorer (``_bm25``, Lucene-form idf) run on ONE query
+    whose terms all weigh 1.0, over the ``term_freqs`` postings.
 
-    Returns (phrase_id, id, n_hits, first_start) ordered by
-    (phrase_id, id). Phrases are indexed by their position in
-    ``phrases``; empty phrases are rejected.
+    Duplicate query terms are deduplicated (a bag-of-terms query;
+    weighted queries go through ``bm25_multi_topk`` with an explicit
+    weight column instead). An empty term list returns no rows. Top-k
+    is TakeOrdered (no global sort).
 
-    Scale shape: the token stream is filtered by the broadcast term
-    set BEFORE any shuffle (phrase vocabulary is tiny against a web
-    corpus); the explode multiplier is the number of (phrase, slot)
-    pairs a token matches — bounded by the query table, not the
-    corpus. No self-joins, no windows.
+    Output: (id, score, n_matched) for the k best documents,
+    score rounded to 4 dp, ties broken by id ascending.
     """
-    rows = []
-    lens = {}
-    for pid, phrase in enumerate(phrases):
-        terms = [t for t in phrase.split(" ") if t != ""]
-        if not terms:
-            raise ValueError(f"empty phrase at index {pid}")
-        lens[pid] = len(terms)
-        rows += [(pid, i, t) for i, t in enumerate(terms)]
-    spark = docs.sparkSession
-    q = spark.createDataFrame(rows, "phrase_id int, slot int, term string")
-    m_map = F.create_map(*[
-        x for pid, m in sorted(lens.items())
-        for x in (F.lit(pid), F.lit(m))
-    ])
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    )
-    cand = toks.join(
-        F.broadcast(q), toks["tok"] == q["term"]
-    ).select(
-        "id", "phrase_id",
-        (F.col("pos") - F.col("slot")).alias("start"),
-        "slot",
-    ).filter(F.col("start") >= 0)
-    hits = (
-        cand.groupBy("id", "phrase_id", "start")
-        .agg(F.countDistinct("slot").alias("n_slots"))
-        .filter(F.col("n_slots") == F.element_at(m_map, F.col("phrase_id")))
-    )
-    return (
-        hits.groupBy("phrase_id", "id")
-        .agg(
-            F.count("*").alias("n_hits"),
-            F.min("start").alias("first_start"),
-        )
-        .orderBy("phrase_id", "id")
-    )
-
+    return _bm25_terms_topk(term_freqs(docs, id_col, text_col),
+                            query_terms, k, id_col, k1, b)
 
 
 def bm25f_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
@@ -219,62 +189,25 @@ def bm25f_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
     with the default 2.0/1.0 weights every partial is an exact small
     integer in double, so Spark's reduce order cannot perturb it.
 
-    Scale shape: identical to bm25_topk — ONE fielded term-frequency
-    aggregation feeds df/dl/score (shared exchange), stats ride a
-    1-row broadcast, query terms broadcast into a semi-join, top-k is
-    TakeOrdered.
+    Only the postings differ from ``bm25_topk``: ONE fielded
+    term-frequency aggregation is scored by the same single-query path
+    (``_bm25`` on one weight-1.0 query, TakeOrdered top-k); with
+    w_title = w_body = 1.0 the two return the same rows.
 
     Output: (id, score 4 dp, n_matched), ties broken by id ascending.
     """
-    words = F.split(F.col(text_col), " ")
     weight = F.when(F.col("pos") < title_words, F.lit(w_title)) \
         .otherwise(F.lit(w_body))
     wtf = (
         docs.select(
-            F.col(id_col), F.posexplode(words).alias("pos", "term")
+            F.col(id_col),
+            F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "term"),
         )
         .filter(F.col("term") != "")
         .groupBy("term", id_col)
-        .agg(F.sum(weight).alias("wtf"))
+        .agg(F.sum(weight).alias("tf"))
     )
-    qt = wtf.sparkSession.createDataFrame(
-        [(t,) for t in dict.fromkeys(query_terms)], ["term"]
-    )
-    dl = wtf.groupBy(id_col).agg(F.sum("wtf").alias("wdl"))
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("wdl").alias("avgwdl"),
-    )
-    df_t = (
-        wtf.join(F.broadcast(qt), "term")
-        .groupBy("term")
-        .agg(F.count("*").cast("double").alias("df"))
-    )
-    scored = (
-        wtf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .select(
-            F.col(id_col),
-            (
-                F.log((F.col("n_docs") - F.col("df") + 0.5)
-                      / (F.col("df") + 0.5) + 1.0)
-                * (F.col("wtf") * (k1 + 1))
-                / (F.col("wtf")
-                   + k1 * (1 - b + b * F.col("wdl") / F.col("avgwdl")))
-            ).alias("part"),
-        )
-        .groupBy(id_col)
-        .agg(
-            round_he(F.sum("part"), 4).alias("score"),
-            F.count("*").alias("n_matched"),
-        )
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-    )
-
+    return _bm25_terms_topk(wtf, query_terms, k, id_col, k1, b)
 
 
 def bm25_multi_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
@@ -287,123 +220,122 @@ def bm25_multi_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     ``queries``: (query_id, term, weight) — weights scale each term's
     contribution (duplicate (query_id, term) rows sum their weights, the
     bag-of-terms multiplicity made explicit). Per-query score(d) =
-    sum over the query's terms of weight * idf * tf-saturation, the same
-    Lucene-form idf as ``bm25_topk``.
+    sum over the query's terms of weight * idf * tf-saturation, computed
+    by the same scorer (``_bm25``) as ``bm25_topk``, which is this
+    function on one weight-1.0 query.
 
     Scale shape: the query table broadcasts (it is tiny next to the
-    corpus); df/dl/stats derive from the SAME single term_freqs
-    aggregation as the single-query path; scoring joins postings to the
-    broadcast query table — one row per (matching term, doc, query) —
-    then aggregates on (query_id, doc). Per-query top-k is a row_number
-    window on query_id, which Spark compiles to WindowGroupLimit
-    (map-side per-partition top-k before the shuffle — the
-    domain_quota_sample pattern), so no global sort and no per-query
-    jobs. Output: (query_id, rank, id, score, n_matched).
+    corpus) against the ONE term_freqs aggregation. Per-query top-k is
+    a row_number window on query_id, which Spark compiles to
+    WindowGroupLimit (map-side per-partition top-k before the shuffle —
+    the domain_quota_sample pattern), so no global sort and no
+    per-query jobs. Output: (query_id, rank, id, score, n_matched).
     """
-    from pyspark.sql import Window
-
-    tf = term_freqs(docs, id_col, text_col)
     q = (
         queries.groupBy("query_id", "term")
         .agg(F.sum("weight").cast("double").alias("weight"))
-    )
-    terms = q.select("term").distinct()
-    dl = tf.groupBy(id_col).agg(F.sum("tf").cast("double").alias("dl"))
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    df_t = (
-        tf.join(F.broadcast(terms), "term")
-        .groupBy("term")
-        .agg(F.count("*").cast("double").alias("df"))
-    )
-    scored = (
-        tf.join(F.broadcast(q), "term")
-        .join(F.broadcast(df_t), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id",
-            F.col(id_col),
-            (
-                F.col("weight")
-                * F.log((F.col("n_docs") - F.col("df") + 0.5)
-                        / (F.col("df") + 0.5) + 1.0)
-                * (F.col("tf") * (k1 + 1))
-                / (F.col("tf")
-                   + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-            ).alias("part"),
-        )
-        .groupBy("query_id", id_col)
-        .agg(
-            round_he(F.sum("part"), 4).alias("score"),
-            F.count("*").alias("n_matched"),
-        )
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        _bm25(term_freqs(docs, id_col, text_col), q, id_col, k1, b)
+        .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", id_col, "score", "n_matched")
+    )
+
+
+def phrase_search_multi(docs: DataFrame, phrases: list[str],
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
+    """Exact PHRASE matching for MANY phrases in ONE corpus scan via a
+    positional index — the retrieval capability bag-of-terms BM25
+    cannot express ("new york" as a unit, quoted-query semantics,
+    n-gram counting for decontamination by phrase rather than by
+    whole-doc digest). Looping a single-phrase operator would scan the
+    corpus once per phrase.
+
+    Algorithm (the classic positional-postings intersection, re-shaped
+    shuffle-free beyond one aggregation): tokenize with positions, keep
+    ONLY tokens in the phrase vocabulary (an ``isin`` scan-level filter
+    — phrase terms are a vanishing fraction of a web corpus), and look
+    each token up in ONE literal map term -> [(phrase_id, slot, m)]
+    (m = the phrase's length). A hit at position p for slot i is a
+    CANDIDATE ALIGNMENT (doc, phrase, start = p - i); an alignment
+    where all m slots are present is an exact occurrence: one hash
+    aggregation on (doc, phrase, start) counting distinct slots. No
+    joins at all (neither the textbook m-way self-join chain nor a
+    broadcast phrase table), no window. Repeated words in a phrase are
+    handled by the slot-distinct count (the same token hit can serve
+    two slots only at two different starts).
+
+    Returns (phrase_id, id, n_hits, first_start) ordered by
+    (phrase_id, id). Phrases are indexed by their position in
+    ``phrases``; an empty list returns no rows, a blank phrase raises
+    ValueError. Position arithmetic is on the whitespace token stream —
+    the same tokenization every other text operator here uses.
+
+    Known limit: the literal map is planned as one expression, so
+    planning cost grows with the phrase count. Measured on local[4]
+    over the sf0.1 documents with random 2-4-word phrases: about 1.2 s
+    of planning for 50 phrases, 3.7 s for 500 and 14 s for 2,000
+    (runs of 3 s, 12 s and 73 s). A broadcast (phrase_id, slot, term)
+    table plans faster at those sizes but adds a broadcast job, a fixed
+    cost every single-phrase call would pay.
+    """
+    slots: dict[str, list] = {}
+    for pid, phrase in enumerate(phrases):
+        terms = [t for t in phrase.split(" ") if t != ""]
+        if not terms:
+            raise ValueError(f"empty phrase at index {pid}")
+        for i, t in enumerate(terms):
+            slots.setdefault(t, []).append(F.struct(
+                F.lit(pid).alias("phrase_id"), F.lit(i).alias("slot"),
+                F.lit(len(terms)).alias("m"),
+            ))
+    # the cast types the map even when it is empty (no phrases)
+    slot_map = F.create_map(*[
+        x for t, s in slots.items() for x in (F.lit(t), F.array(*s))
+    ]).cast("map<string,array<struct<phrase_id:int,slot:int,m:int>>>")
+    cand = (
+        docs.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
+        )
+        .filter(F.col("tok").isin(list(slots)))
+        .select("id", "pos",
+                F.explode(F.element_at(slot_map, F.col("tok"))).alias("s"))
+        .select("id", "s.phrase_id", "s.slot", "s.m",
+                (F.col("pos") - F.col("s.slot")).alias("start"))
+        .filter(F.col("start") >= 0)
+    )
+    hits = (
+        cand.groupBy("id", "phrase_id", "m", "start")
+        .agg(F.countDistinct("slot").alias("n_slots"))
+        .filter(F.col("n_slots") == F.col("m"))
+    )
+    return (
+        hits.groupBy("phrase_id", "id")
+        .agg(
+            F.count("*").alias("n_hits"),
+            F.min("start").alias("first_start"),
+        )
+        .orderBy("phrase_id", "id")
     )
 
 
 def phrase_search(docs: DataFrame, phrase: str,
                   id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
-    """Exact PHRASE matching via a positional index — the retrieval
-    capability bag-of-terms BM25 cannot express ("new york" as a unit,
-    quoted-query semantics, n-gram counting for decontamination by
-    phrase rather than by whole-doc digest).
-
-    Algorithm (the classic positional-postings intersection, re-shaped
-    shuffle-free beyond one aggregation): tokenize with positions, keep
-    ONLY tokens appearing in the phrase (the scan-level filter that
-    makes this cheap — phrase terms are a vanishing fraction of a web
-    corpus), and for each phrase slot i map a hit at position p to a
-    CANDIDATE ALIGNMENT (doc, start = p - i). A start where all m slots
-    are present is an exact occurrence: one hash aggregation on (doc,
-    start) counting distinct slots — no self-joins, no m-way join chain
-    (the textbook plan), no window. Repeated words in the phrase are
-    handled by the slot-distinct count (the same token hit can serve
-    two slots only at two different starts).
+    """Exact matching for ONE phrase: ``phrase_search_multi`` run on
+    ``[phrase]`` (same slot-alignment algorithm, same join-free plan).
 
     Returns (id, n_hits, first_start) per matching document, ordered by
-    id. Position arithmetic is on the whitespace token stream — the
-    same tokenization every other text operator here uses.
+    id; a blank phrase raises ValueError.
     """
-    terms = [t for t in phrase.split(" ") if t != ""]
-    if not terms:
-        raise ValueError("empty phrase")
-    m = len(terms)
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok"),
-    ).filter(F.col("tok").isin(terms))
-    # each phrase slot this token could fill -> candidate alignment
-    slots = F.array(*[
-        F.when(F.col("tok") == t, F.lit(i)).otherwise(F.lit(None))
-        for i, t in enumerate(terms)
-    ])
-    cand = toks.select(
-        "id",
-        F.explode(F.filter(slots, lambda s: s.isNotNull())).alias("slot"),
-        F.col("pos"),
-    ).select("id", "slot", (F.col("pos") - F.col("slot")).alias("start"))
-    hits = (
-        cand.filter(F.col("start") >= 0)
-        .groupBy("id", "start")
-        .agg(F.countDistinct("slot").alias("n_slots"))
-        .filter(F.col("n_slots") == m)
-    )
     return (
-        hits.groupBy("id")
-        .agg(
-            F.count("*").alias("n_hits"),
-            F.min("start").alias("first_start"),
-        )
+        phrase_search_multi(docs, [phrase], id_col, text_col)
+        .select("id", "n_hits", "first_start")
         .orderBy("id")
     )

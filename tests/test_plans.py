@@ -591,6 +591,13 @@ def test_phrase_search_single_aggregation_no_self_join(spark):
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
     # no join at all: the slot trick replaces the per-term join chain
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    # the multi-phrase form is the same matcher: one literal slot map
+    # looked up per token, so no join of any kind either
+    multi = formatted_plan(Q.QUERIES["phrase_search_multi"](spark, SF))
+    assert "BatchEvalPython" not in multi and "PythonUDF" not in multi
+    for join in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin",
+                 "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert join not in multi, join
 
 
 def test_trustrank_stays_jvm_side(spark):

@@ -410,3 +410,52 @@ def test_phrase_search_multi_equals_single(spark):
 
     with _pytest.raises(ValueError):
         retrieval.phrase_search_multi(docs, ["ok phrase", " "])
+
+
+def test_retrieval_empty_queries_return_no_rows(spark):
+    """An empty query (no terms, no query rows, no phrases) is a valid
+    request with an empty answer, never a schema-inference error; a
+    blank phrase is still a caller error."""
+    import pytest as _pytest
+
+    docs = spark.createDataFrame(
+        [(1, "spark join"), (2, "window fast")], "doc_id long, text string")
+    no_queries = spark.createDataFrame(
+        [], "query_id long, term string, weight double")
+    assert retrieval.bm25_topk(docs, []).collect() == []
+    assert retrieval.bm25f_topk(docs, []).collect() == []
+    assert retrieval.bm25_multi_topk(docs, no_queries).collect() == []
+    assert retrieval.phrase_search_multi(docs, []).collect() == []
+    with _pytest.raises(ValueError):
+        retrieval.phrase_search(docs, "  ")
+    with _pytest.raises(ValueError):
+        retrieval.phrase_search_multi(docs, [" "])
+
+
+def test_bm25_entry_points_agree(spark):
+    """The three BM25 entry points share one scorer: bm25_topk is
+    bm25_multi_topk on one weight-1.0 query (its duplicate term
+    dropped), and bm25f_topk with equal field weights is bm25_topk —
+    row for row, in rank order, scores bit-identical."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(30)] + ["spark", "join", "window"]
+    rows = [(i, " ".join(rng.choice(vocab)
+                         for _ in range(rng.randint(1, 40))))
+            for i in range(400)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    terms = ["spark", "join", "spark", "w3", "absent"]
+    single = [tuple(r) for r in retrieval.bm25_topk(docs, terms, k=25)
+              .collect()]
+    q = spark.createDataFrame(
+        [(1, t, 1.0) for t in dict.fromkeys(terms)],
+        "query_id long, term string, weight double")
+    multi = [(r["doc_id"], r["score"], r["n_matched"])
+             for r in retrieval.bm25_multi_topk(docs, q, k=25)
+             .orderBy("rank").collect()]
+    fielded = [tuple(r) for r in retrieval.bm25f_topk(
+        docs, terms, k=25, w_title=1.0, w_body=1.0).collect()]
+    assert len(single) == 25
+    assert single == multi
+    assert fielded == single
