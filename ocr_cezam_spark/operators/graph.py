@@ -54,9 +54,21 @@ def pagerank(links: DataFrame, iters: int = 3, damping: float = DAMPING,
             [], "host string, rank double"
         )
     teleport = (1.0 - damping) / n
+    return _rank_loop(links, hosts, F.lit(1.0 / n), F.lit(teleport), iters,
+                      damping, src_col, dst_col)
+
+
+def _rank_loop(links: DataFrame, hosts: DataFrame, init: F.Column,
+               teleport: F.Column, iters: int, damping: float,
+               src_col: str, dst_col: str) -> DataFrame:
+    """The fixed-iteration rank loop shared by ``pagerank`` and
+    ``trustrank``: ranks start at ``init`` over the (checkpointed) host
+    frame, and each iteration is edges ⋈ ranks on src, sum(rank/outd)
+    by dst, hosts ⟕ contrib, rank = teleport + d * coalesce(s, 0).
+    Returns (host, rank) rounded to 8 dp."""
     deg = links.groupBy(src_col).agg(F.count("*").alias("outd"))
     edges = links.join(deg, src_col).localCheckpoint(eager=False)
-    ranks = hosts.select("host", F.lit(1.0 / n).alias("rank"))
+    ranks = hosts.select("host", init.alias("rank"))
     for _ in range(iters):
         contrib = (
             edges.join(ranks, edges[src_col] == ranks["host"])
@@ -65,8 +77,8 @@ def pagerank(links: DataFrame, iters: int = 3, damping: float = DAMPING,
         )
         ranks = hosts.join(contrib, "host", "left").select(
             "host",
-            (F.lit(teleport)
-             + damping * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+            (teleport + damping * F.coalesce(F.col("s"), F.lit(0.0)))
+            .alias("rank"),
         )
         # |hosts|-sized per-iteration truncation keeps the unrolled plan
         # linear instead of nesting each iteration inside the next
@@ -359,15 +371,16 @@ def trustrank(links: DataFrame, seeds: list[str], iters: int = 3,
     = link-farm signature; graph.hits exposes the same shape from the
     hub side).
 
-    Same fixed-unrolled shape as ``pagerank`` (one |edges|-sized
-    equi-join + agg per iteration, ranks |hosts|-sized, one Catalyst
-    plan) with two deltas: teleport mass (1-d)/|seeds∩hosts| lands on
-    seed hosts only (seeds outside the graph are ignored), and ranks
-    initialize to the teleport vector. Driver state: the present-seed
-    count, one scalar. The degree-annotated edge frame and the host
-    frame are localCheckpoint'ed (lazily) before the loop — each is
-    referenced once per unrolled iteration, and without the cut every
-    reference re-executes the upstream link derivation (the hits /
+    The same rank loop as ``pagerank`` (``_rank_loop``: one
+    |edges|-sized equi-join + agg per iteration, ranks |hosts|-sized and
+    lazily checkpointed every iteration) with two deltas: teleport mass
+    (1-d)/|seeds∩hosts| lands on seed hosts only (seeds outside the
+    graph are ignored), and ranks initialize to the teleport vector.
+    Driver state: the present-seed count, one scalar. The
+    degree-annotated edge frame and the host frame are
+    localCheckpoint'ed (lazily) before the loop — each is referenced
+    once per unrolled iteration, and without the cut every reference
+    re-executes the upstream link derivation (the hits /
     connected_components lesson). Ranks rounded 8 dp; rank mass is NOT
     1 when dangling hosts exist (same convention as ``pagerank`` —
     documented there; the converged/dangling-aware variant pattern
@@ -382,27 +395,12 @@ def trustrank(links: DataFrame, seeds: list[str], iters: int = 3,
     tele = F.when(
         F.col("host").isin(seeds), F.lit((1.0 - damping) / n_seeds)
     ).otherwise(F.lit(0.0))
-    deg = links.groupBy(src_col).agg(F.count("*").alias("outd"))
-    edges = links.join(deg, src_col).localCheckpoint(eager=False)
     # init = the teleport vector scaled to unit mass (the standard
     # TrustRank static score vector start)
-    ranks = hosts.select(
-        "host",
-        F.when(F.col("host").isin(seeds),
-               F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    for _ in range(iters):
-        contrib = (
-            edges.join(ranks, edges[src_col] == ranks["host"])
-            .groupBy(F.col(dst_col).alias("host"))
-            .agg(F.sum(F.col("rank") / F.col("outd")).alias("s"))
-        )
-        ranks = hosts.join(contrib, "host", "left").select(
-            "host",
-            (tele + damping * F.coalesce(F.col("s"), F.lit(0.0)))
-            .alias("rank"),
-        )
-    return ranks.select("host", round_he("rank", 8).alias("rank"))
+    init = F.when(F.col("host").isin(seeds),
+                  F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+    return _rank_loop(links, hosts, init, tele, iters, damping,
+                      src_col, dst_col)
 
 
 def resolve_redirects(edges: DataFrame, max_hops: int = 32,

@@ -546,13 +546,15 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
     verdicts 3-6 (NULL otherwise), sim_est only for near-dup rows,
     ordered by id.
 
-    Scale shape: canonicalization is codegen'd projection; the url
-    match is ONE equi-join on canonical url; exact dedup ONE equi-join
-    on digest against the corpus digest table; near-dup the bounded
-    incremental band join (never corpus x corpus); quality map-only.
-    Each batch row crosses each join at most once; the corpus side is
-    never shuffled beyond its digest/band aggregations (pre-computable
-    per epoch at production).
+    Scale shape: canonicalization is codegen'd projection; the batch
+    is left-joined to the corpus url table, then the digest table; that
+    frame (the only one read twice) feeds the near-dup candidates —
+    the bounded incremental band join, never corpus x corpus — and,
+    with the best near match left-joined on id, ONE projection whose
+    when-chain follows the precedence above. No branch, no union; each
+    batch row crosses each join at most once; the corpus side is never
+    shuffled beyond its digest/band aggregations (pre-computable per
+    epoch at production).
     """
     from ..functions.url import canonicalize_url
     from ..operators.dedup import incremental_near_dup
@@ -571,39 +573,22 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
              .alias("b"))
         .select("url", "b.id", "b.text", "b.digest", "b.quality")
     )
-    # Stage frontiers are lazily checkpointed (the build_training_corpus
-    # pattern): every precedence branch below references its parent frame
-    # twice (matched/novel, exact/cands, near/rest), so the un-truncated
-    # union re-embedded the canonicalize+digest+quality subtree up to
-    # five times — once per verdict branch (guide section 3.3).
     corp = corpus.select(
         F.col(id_col).alias("corpus_id"),
         canonicalize_url(F.col(url_col)).alias("url"),
         F.md5(F.col(text_col)).alias("cdigest"),
     ).localCheckpoint(eager=False)
-    um = best.join(corp, "url", "left").localCheckpoint(eager=False)
-    matched = um.filter(F.col("corpus_id").isNotNull()).select(
-        "id", "url",
-        F.when(F.col("digest") == F.col("cdigest"),
-               F.lit("skip_unchanged")).otherwise(F.lit("update"))
-        .alias("verdict"),
-        "corpus_id",
-        F.lit(None).cast("double").alias("sim_est"),
-    )
-    novel = um.filter(F.col("corpus_id").isNull()).select(
-        "id", "url", "text", "digest", "quality"
-    )
     cdig = corp.groupBy(F.col("cdigest").alias("digest")).agg(
-        F.min("corpus_id").alias("corpus_id")
+        F.min("corpus_id").alias("exact_id")
     )
-    ed = novel.join(cdig, "digest", "left").localCheckpoint(eager=False)
-    exact = ed.filter(F.col("corpus_id").isNotNull()).select(
-        "id", "url", F.lit("skip_exact_dup").alias("verdict"),
-        "corpus_id", F.lit(None).cast("double").alias("sim_est"),
+    # The one frame read twice (verdict projection + near-dup candidates)
+    joined = (
+        best.join(corp, "url", "left").join(cdig, "digest", "left")
+        .localCheckpoint(eager=False)
     )
-    cands = ed.filter(F.col("corpus_id").isNull()).select(
-        "id", "url", "text", "quality"
-    ).localCheckpoint(eager=False)
+    cands = joined.filter(
+        F.col("corpus_id").isNull() & F.col("exact_id").isNull()
+    )
     near = incremental_near_dup(
         cands.select(F.col("id").alias(id_col), F.col("text")),
         corpus.select(F.col(id_col), F.col(text_col).alias("text")),
@@ -614,25 +599,27 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
         .agg(F.max(F.struct(
             F.col("sim_est"), (-F.col("corpus_id")).alias("neg"),
         )).alias("b"))
-        .select("id", (-F.col("b.neg")).cast("long").alias("corpus_id"),
+        .select("id", (-F.col("b.neg")).cast("long").alias("near_id"),
                 F.col("b.sim_est").alias("sim_est"))
     )
-    nj = cands.join(near_best, "id", "left").localCheckpoint(eager=False)
-    near_rows = nj.filter(F.col("corpus_id").isNotNull()).select(
-        "id", "url", F.lit("skip_near_dup").alias("verdict"),
-        "corpus_id", "sim_est",
-    )
-    rest = nj.filter(F.col("corpus_id").isNull()).select(
-        "id", "url",
-        F.when(F.col("quality") < min_quality,
-               F.lit("skip_low_quality")).otherwise(F.lit("insert"))
-        .alias("verdict"),
-        F.lit(None).cast("long").alias("corpus_id"),
-        F.lit(None).cast("double").alias("sim_est"),
-    )
+    url_hit = F.col("corpus_id").isNotNull()
     return (
-        matched.unionByName(exact).unionByName(near_rows)
-        .unionByName(rest)
+        joined.join(near_best, "id", "left")
+        .select(
+            "id", "url",
+            F.when(url_hit & (F.col("digest") == F.col("cdigest")),
+                   F.lit("skip_unchanged"))
+            .when(url_hit, F.lit("update"))
+            .when(F.col("exact_id").isNotNull(), F.lit("skip_exact_dup"))
+            .when(F.col("near_id").isNotNull(), F.lit("skip_near_dup"))
+            .when(F.col("quality") < min_quality,
+                  F.lit("skip_low_quality"))
+            .otherwise(F.lit("insert"))
+            .alias("verdict"),
+            F.coalesce("corpus_id", "exact_id", "near_id")
+            .alias("corpus_id"),
+            "sim_est",
+        )
         .orderBy("id")
     )
 

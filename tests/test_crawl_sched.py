@@ -327,11 +327,14 @@ def test_corpus_report_fields(spark):
 def test_ingest_delta_verdicts_and_batch_collapse(spark):
     """Every verdict class on a hand fixture, plus the within-batch
     recrawl collapse (two batch rows on one canonical url keep max id)
-    and the exact-before-near precedence."""
+    and the verdict precedence: exact before near, and url / exact /
+    near matches all before the quality gate."""
     corpus = spark.createDataFrame(
         [
             (1, "https://a.ex/p1", "alpha beta gamma delta"),
             (2, "https://a.ex/p2", "one two three four"),
+            (3, "https://a.ex/p3", "plain words about the weather today"),
+            (4, "https://a.ex/p4", "m m m m m m m m m m m w"),  # low quality
         ],
         "doc_id long, url string, text string",
     )
@@ -351,6 +354,13 @@ def test_ingest_delta_verdicts_and_batch_collapse(spark):
             (15, "https://a.ex/s", "j j j j j j j j j j j u"),
             # novel url, novel good content -> insert
             (16, "https://a.ex/t", "completely different fresh words"),
+            # matched url, changed low-quality text -> update (updates
+            # bypass the quality gate)
+            (17, "https://a.ex/p3", "k k k k k k k k k k k v"),
+            # novel url, text of the low-quality doc 4 -> exact dup
+            (18, "https://a.ex/u", "m m m m m m m m m m m w"),
+            # novel url, low-quality near clone of doc 4 -> near dup
+            (19, "https://a.ex/v", "m m m m m m m m m m m m w"),
         ],
         "doc_id long, url string, text string",
     )
@@ -368,6 +378,11 @@ def test_ingest_delta_verdicts_and_batch_collapse(spark):
     assert got[15]["verdict"] == "skip_low_quality"
     assert got[16]["verdict"] == "insert"
     assert got[16]["corpus_id"] is None
+    assert got[17]["verdict"] == "update" and got[17]["corpus_id"] == 3
+    assert got[18]["verdict"] == "skip_exact_dup"
+    assert got[18]["corpus_id"] == 4
+    assert got[19]["verdict"] == "skip_near_dup"
+    assert got[19]["corpus_id"] == 4 and got[19]["sim_est"] >= 0.5
 
 
 def test_hdr_length_gate_trims_both_tails(spark):

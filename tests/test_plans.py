@@ -600,6 +600,13 @@ def test_phrase_search_single_aggregation_no_self_join(spark):
         assert join not in multi, join
 
 
+def test_ingest_delta_is_one_projection_no_union(spark):
+    """ingest_delta assigns every verdict in one projection over left
+    joins: no per-verdict branches glued back by a union."""
+    plan = formatted_plan(Q.QUERIES["ingest_delta"](spark, SF))
+    assert "Union" not in plan
+
+
 def test_trustrank_stays_jvm_side(spark):
     plan = formatted_plan(Q.QUERIES["trustrank"](spark, SF))
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan

@@ -7,6 +7,10 @@ the contract described in the driver docs so mismatches surface here
 before the real run.
 
 Usage: python tools/check_oracles.py [name ...]
+
+A name that is not a registry query is an error: the tool prints it and
+exits 2 before starting Spark, so a misspelt name cannot pass as an empty
+sweep.
 """
 
 from __future__ import annotations
@@ -74,7 +78,12 @@ def main() -> None:
     import __spark_entry__ as entry
     from ocr_cezam_spark.session import get_spark
 
+    qs, oracles = entry.queries(), entry.oracle_sql()
     only = set(sys.argv[1:])
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("unknown query names:", " ".join(unknown))
+        sys.exit(2)
     spark = get_spark(app="oracle_check", master="local[8]", shuffle_partitions=8)
 
     con = duckdb.connect()
@@ -83,7 +92,6 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
