@@ -11,7 +11,8 @@ input html (capped at the kernel's partition count), so a small run
 writes one file per table. The eight secondary tables then commit
 concurrently, and the ``extracted`` resume marker commits last, only
 after all eight have. Every Spark job the run launches carries a
-``run_job: <step>`` job description and stays in the caller's job group.
+``run_job: <step>`` job description (``materialize: run_job: kernel`` for
+the kernel output's checkpoint) and stays in the caller's job group.
 
 Cluster launch::
 
@@ -32,12 +33,12 @@ import argparse
 import math
 import re
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
+from .materialize import job_description, materialize
 from .operators import extract as X
 from .skew import salted_repartition
 from .sources import catalog
@@ -51,19 +52,6 @@ def _conf_bytes(value: str) -> int:
     if m is None:
         raise ValueError(f"not a byte size: {value!r}")
     return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
-
-
-@contextmanager
-def _step(spark: SparkSession, what: str):
-    """Label this thread's Spark jobs ``run_job: <what>``; restore the
-    caller's description on exit."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"run_job: {what}")
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 def run_job(
@@ -88,7 +76,7 @@ def run_job(
     # and without the n_* columns in one directory). Refuse loudly.
     # The marker table is read (and listed) once; the resume anti-join
     # below reuses this frame.
-    with _step(spark, "read marker"):
+    with job_description(spark, "run_job: read marker"):
         existing = catalog.read(spark, extracted_table)
     if existing is not None:
         was_redacted = "n_emails" in existing.columns
@@ -108,7 +96,7 @@ def run_job(
     # salting exists to prevent. One action; detect_hot_hosts projects
     # only the url's host, so the anti-join it re-executes stays
     # url-column-pruned.
-    with _step(spark, "hot hosts"):
+    with job_description(spark, "run_job: hot hosts"):
         docs = salted_repartition(docs, num_partitions)
     out = X.run_extract(docs)
 
@@ -127,12 +115,12 @@ def run_job(
     # committed table; appending to that path makes Spark recache (and
     # re-execute) any plan that references it, which would see the job's own
     # fresh output and anti-join everything away — later projections would
-    # silently write 0 rows. localCheckpoint materializes the kernel output
-    # and cuts the plan's tie to the table path. (On a real cluster the
-    # equivalent durable pattern is staging the nested output to its own
-    # table first; executor loss here just restarts the resume job.)
-    with _step(spark, "kernel"):
-        out = out.localCheckpoint(eager=True)
+    # silently write 0 rows. Materializing the kernel output cuts the
+    # plan's tie to the table path. With a checkpoint dir set (the durable
+    # pattern on a real cluster) the output is staged to that dir and
+    # survives executor loss; without one a lost block fails the run, and
+    # rerunning it resumes from the committed marker.
+    out = materialize(out, "run_job: kernel", eager=True)
     # Size the output files by bytes, not by the kernel's partition count:
     # one partition per maxPartitionBytes of input html, at most
     # num_partitions. A small run then commits one file per table instead
@@ -173,7 +161,7 @@ def run_job(
         # action per table, never a second .count() pass re-executing the
         # projection (pure waste at scale).
         table_obs = Observation(f"rows_{name}")
-        with _step(spark, f"append {name}"):
+        with job_description(spark, f"run_job: append {name}"):
             catalog.append(
                 df.observe(table_obs, F.count(F.lit(1)).alias("n")),
                 f"{output_prefix}/{name}",
@@ -216,11 +204,12 @@ def run_job(
     counts["extracted"] = write("extracted", ext)
     counts["observed_docs"] = int(observed.get("docs") or 0)
     counts["observed_errors"] = int(observed.get("errors") or 0)
-    # localCheckpoint blocks are NOT released by DataFrame.unpersist()
+    # Local checkpoint blocks are NOT released by DataFrame.unpersist()
     # (that only clears CacheManager entries from .cache()/.persist());
     # they are freed by the ContextCleaner once the checkpointed RDD is
     # garbage-collected when `out` goes out of scope — per-run residency
-    # is bounded by one job's kernel output.
+    # is bounded by one job's kernel output. Reliable checkpoint files
+    # stay in the checkpoint dir (see materialize).
     return counts
 
 

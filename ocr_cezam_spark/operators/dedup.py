@@ -30,6 +30,7 @@ from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.types import ArrayType, LongType
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.materialize import materialize
 
 HEX_HIGH = ("8", "9", "a", "b", "c", "d", "e", "f")
 
@@ -345,12 +346,11 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     near_dup_pairs_dedup_first — composing exact-dedup FIRST is the
     preferred fix; the cap is the backstop."""
     # The signature frame feeds THREE consumers (band explode + both
-    # sides of the verify join); a lazy localCheckpoint computes the
+    # sides of the verify join); a lazy checkpoint computes the
     # (id, 64-long) table once — at production this is exactly the
     # signature table a dedup run writes before banding.
-    sig = minhash_signature(docs, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    sig = materialize(minhash_signature(docs, id_col, text_col, k),
+                      "minhash_lsh_pairs signatures")
     band = ["band_idx", "band_key"]
     banded = banded_sigs(sig, "doc", id_col=id_col, k=k,
                          bands=bands).select("doc_id", *band)
@@ -420,10 +420,10 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
     did = F.col(id_col)
     # the distinct-shingle table feeds sizes, the df cap, the capped
     # join and the member intersection — compute it once (guide 3.3)
-    sh = docs.select(
+    sh = materialize(docs.select(
         did.alias("id"),
         F.explode(F.array_distinct(shingles(text_col))).alias("sh"),
-    ).localCheckpoint(eager=False)
+    ), "lsh_threshold_curve shingles")
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
     pairs = shared_key_pairs(
         drop_hot_keys(sh, ["sh"], max_df), "id", ["sh"]
@@ -438,7 +438,7 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
         pairs = pairs.filter(h % pair_mod == 0)
     # evaluation pairs feed the member set, the intersection join and
     # the jaccard attach — compute the (sampled) pair set once
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = materialize(pairs, "lsh_threshold_curve pairs")
     # exact jaccard over FULL shingle sets of the sampled pairs — the
     # intersection self-join runs over PAIR MEMBERS only (semi-join
     # first), so its cost is bounded by the evaluation sample, never by
@@ -464,9 +464,8 @@ def lsh_threshold_curve(docs: DataFrame, id_col: str = "doc_id",
              ).alias("s"),
         )
     )
-    sig = minhash_signature(docs, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    sig = materialize(minhash_signature(docs, id_col, text_col, k),
+                      "lsh_threshold_curve signatures")
     sa = sig.select(F.col(id_col).alias("a"), F.col("sig").alias("sa"))
     sb = sig.select(F.col(id_col).alias("b"), F.col("sig").alias("sb"))
     band_eq = [
@@ -554,11 +553,11 @@ def _on_representatives(docs: DataFrame, id_col: str, text_col: str,
     digest = F.md5(F.col(text_col)).alias("digest")
     # the digest-group table feeds the representative semi-join AND both
     # multiplicity attaches — one lazy checkpoint, three references
-    groups = (
+    groups = materialize(
         docs.select(F.col(id_col), digest)
         .groupBy("digest")
-        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies"))
-        .localCheckpoint(eager=False)
+        .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies")),
+        "_on_representatives digest groups",
     )
     reps = docs.join(
         groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
@@ -876,21 +875,20 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     Iterations needed = graph diameter (near-dup clusters are tiny, so 2-3
     in practice); every graph of diameter <= max_iter - 1 converges, the
     same budget as one-step rounds with a final no-change check.
-    localCheckpoint truncates the growing plan each round (the classic
-    iterative-algorithm lineage blowup).
+    An eager checkpoint truncates the growing plan each round (the
+    classic iterative-algorithm lineage blowup).
     """
     from pyspark.sql import functions as F  # noqa: N812
 
-    edges = (
+    # every iteration joins against edges: without this cut the
+    # candidate-pair chain (minhash + LSH upstream) is re-executed AND
+    # re-analyzed once per iteration — checkpointing it makes each round
+    # one tiny join over a leaf (measured ~2x on dedup_clusters at sf0.1)
+    edges = materialize(
         pairs.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .unionByName(pairs.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .distinct()
-        # every iteration joins against edges: without this cut the
-        # candidate-pair chain (minhash + LSH upstream) is re-executed
-        # AND re-analyzed once per iteration — checkpointing it makes
-        # each round one tiny join over a leaf (measured ~2x on
-        # dedup_clusters at sf0.1)
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "connected_components edges",
     )
     labels = (
         edges.select(F.col("x").alias("node"))
@@ -929,10 +927,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 64) -> DataFrame:
     for _ in range(max_iter // 2 + 1):
         start = labels.withColumn("orig", F.col("component"))
         stepped = step(step(start))
-        new_labels = stepped.select(
+        new_labels = materialize(stepped.select(
             "node", "component",
             (F.col("component") < F.col("orig")).cast("int").alias("changed"),
-        ).localCheckpoint(eager=True)
+        ), "connected_components round", eager=True)
         n_changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
         labels = new_labels.drop("changed")
         if n_changed == 0:
@@ -986,9 +984,9 @@ def cluster_members(docs: DataFrame, id_col: str = "doc_id",
     # groups feeds the representative semi-join AND the component
     # re-attach below — one lazy checkpoint instead of two digest
     # aggregations over the corpus (guide section 3.3)
-    groups = digests.groupBy("digest").agg(
-        F.min(id_col).alias("keeper")
-    ).localCheckpoint(eager=False)
+    groups = materialize(
+        digests.groupBy("digest").agg(F.min(id_col).alias("keeper")),
+        "cluster_members digest groups")
     reps = docs.join(
         groups.select(F.col("keeper").alias(id_col)), id_col, "left_semi"
     )
@@ -1067,7 +1065,8 @@ def dedup_weights(docs: DataFrame, id_col: str = "doc_id",
     """
     # member assignment is consumed twice (size aggregation + the member
     # join): lazy checkpoint computes the full clustering chain once
-    m = cluster_members(docs, id_col, text_col).localCheckpoint(eager=False)
+    m = materialize(cluster_members(docs, id_col, text_col),
+                    "dedup_weights members")
     sizes = m.groupBy("component").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
@@ -1165,10 +1164,10 @@ def paragraph_dedup(docs: DataFrame, id_col: str = "doc_id",
     # join — lazy checkpoint builds the posexplode+md5 pass once (guide
     # 3.3); production materializes exactly this table between the count
     # and filter phases of a C4-style dedup
-    paras = docs.select(
+    paras = materialize(docs.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
-    ).withColumn("ph", F.md5("para")).localCheckpoint(eager=False)
+    ).withColumn("ph", F.md5("para")), "paragraph_dedup paragraphs")
     # The empty paragraph (blank-line separators, trailing newlines) is
     # LAYOUT, not content: its digest exceeds max_freq as soon as a few
     # docs contain any blank line, and dropping it would strip blank-line
@@ -1394,10 +1393,10 @@ def substring_span_dedup(docs: DataFrame, n: int = 5, min_docs: int = 2,
     ).otherwise(F.array().cast("array<struct<pos:int,gram:string>>")))
     # positional grams feed the df aggregation AND the coverage join:
     # lazy checkpoint builds the gram table once (guide section 3.3)
-    pos_gram = docs.select(
+    pos_gram = materialize(docs.select(
         F.col(id_col), F.explode(grams).alias("pg")
     ).select(id_col, F.col("pg.pos").alias("pos"),
-             F.col("pg.gram").alias("gram")).localCheckpoint(eager=False)
+             F.col("pg.gram").alias("gram")), "substring_span_dedup grams")
     dup_grams = (
         pos_gram.groupBy("gram")
         .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
@@ -1463,9 +1462,9 @@ def winnowing_pairs(docs: DataFrame, k: int = 4, w: int = 5,
 
     # the distinct fingerprint table feeds the bucket-cap aggregation and
     # both self-join sides — compute the winnowing pass once (guide 3.3)
-    fps = winnowing_fingerprints(
+    fps = materialize(winnowing_fingerprints(
         docs, k=k, w=w, id_col=id_col, text_col=text_col
-    ).select(id_col, "fp").distinct().localCheckpoint(eager=False)
+    ).select(id_col, "fp").distinct(), "winnowing_pairs fingerprints")
     pairs = shared_key_pairs(drop_hot_keys(fps, ["fp"], max_bucket),
                              id_col, ["fp"])
     return pairs.select(
@@ -1508,11 +1507,12 @@ def containment_pairs(docs: DataFrame, id_col: str = "doc_id",
     # sides. Lazy checkpoints compute each once (guide section 3.3) — at
     # production these are the inverted-index tables a containment run
     # materializes anyway.
-    sh = docs.select(
+    sh = materialize(docs.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(shingles(text_col, n))).alias("sh"),
-    ).localCheckpoint(eager=False)
-    kept = drop_hot_keys(sh, ["sh"], max_df).localCheckpoint(eager=False)
+    ), "containment_pairs shingles")
+    kept = materialize(drop_hot_keys(sh, ["sh"], max_df),
+                       "containment_pairs capped shingles")
     sizes = kept.groupBy("id").agg(F.count("*").alias("n_sh"))
     pairs = shared_key_pairs(kept, "id", ["sh"]).withColumnRenamed(
         "n_shared", "n_common"
@@ -1612,12 +1612,10 @@ def incremental_near_dup(new_docs: DataFrame, corpus: DataFrame,
     # through the band join AND the distinct, ~1 KB per candidate row
     # where 16 bytes of ids suffice — guide section 2.3: shuffle keys,
     # not payloads).
-    sn = minhash_signature(new_docs, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
-    sc = minhash_signature(corpus, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    sn = materialize(minhash_signature(new_docs, id_col, text_col, k),
+                     "incremental_near_dup new signatures")
+    sc = materialize(minhash_signature(corpus, id_col, text_col, k),
+                     "incremental_near_dup corpus signatures")
     nb = banded_sigs(sn, "new", id_col=id_col, k=k, bands=bands).select(
         "new_id", "band_idx", "band_key"
     )

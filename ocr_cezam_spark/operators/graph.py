@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.materialize import materialize
 
 DAMPING = 0.85
 
@@ -34,7 +35,7 @@ def pagerank(links: DataFrame, iters: int = 3, damping: float = DAMPING,
     list. The edge table partitioning on src is reused every iteration.
     The iterations are a driver loop: one driver action, ``hosts.count()``
     (the host count is the only scalar driver state), and a lazy
-    ``localCheckpoint`` of ``ranks`` on every iteration, so each
+    checkpoint of ``ranks`` on every iteration, so each
     iteration's plan starts from the previous ranks instead of nesting
     all earlier iterations. ``pagerank_converged`` is the convergence-loop
     form.
@@ -47,7 +48,7 @@ def pagerank(links: DataFrame, iters: int = 3, damping: float = DAMPING,
     # the kernel extraction chain, replicated iters+1 times. hosts is
     # checkpointed BEFORE the count so the counting action doubles as
     # its materialization.
-    hosts = _hosts(links, src_col, dst_col).localCheckpoint(eager=False)
+    hosts = materialize(_hosts(links, src_col, dst_col), "pagerank hosts")
     n = hosts.count()  # scalar driver state: the host count only
     if n == 0:  # empty edge table: no hosts, not a ZeroDivisionError
         return links.sparkSession.createDataFrame(
@@ -67,7 +68,7 @@ def _rank_loop(links: DataFrame, hosts: DataFrame, init: F.Column,
     by dst, hosts ⟕ contrib, rank = teleport + d * coalesce(s, 0).
     Returns (host, rank) rounded to 8 dp."""
     deg = links.groupBy(src_col).agg(F.count("*").alias("outd"))
-    edges = links.join(deg, src_col).localCheckpoint(eager=False)
+    edges = materialize(links.join(deg, src_col), "rank loop edges")
     ranks = hosts.select("host", init.alias("rank"))
     for _ in range(iters):
         contrib = (
@@ -82,7 +83,7 @@ def _rank_loop(links: DataFrame, hosts: DataFrame, init: F.Column,
         )
         # |hosts|-sized per-iteration truncation keeps the unrolled plan
         # linear instead of nesting each iteration inside the next
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = materialize(ranks, "rank loop ranks")
     return ranks.select("host", round_he("rank", 8).alias("rank"))
 
 
@@ -96,8 +97,7 @@ def _hosts(links: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 
 def pagerank_converged(links: DataFrame, tol: float = 1e-9,
                        max_iters: int = 50, damping: float = DAMPING,
-                       src_col: str = "src", dst_col: str = "dst",
-                       checkpoint_every: int = 1) -> DataFrame:
+                       src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """Production-shape PageRank: dangling-mass redistribution plus an
     L1-convergence loop — the full model, vs the fixed-iteration
     ``pagerank`` above (kept unrolled because its DuckDB oracle twin is a
@@ -114,16 +114,14 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
     to the host list carrying the OLD rank so the L1 delta and the new
     ranks come out of the same frame. Driver state is scalars only: the
     dangling sum (single-row aggregate over the |hosts|-sized anti-join)
-    and the delta. ``localCheckpoint`` truncates the growing lineage
-    (the dedup.connected_components pattern) — without it the plan
-    doubles per iteration and Catalyst analysis dominates past ~15
-    iterations. Default cadence is EVERY iteration: each iteration runs
-    two driver actions (dangling sum, delta) plus feeds the next, so
-    un-materialized lineage would re-execute the |edges|-sized join+agg
-    up to checkpoint_every extra times per window — materializing the
-    |hosts|-sized frame once per iteration is strictly cheaper
-    (review-pass fix; checkpoint_every > 1 only pays if the scalar
-    actions are fused out).
+    and the delta. An eager checkpoint of every iteration's frame
+    truncates the growing lineage (the dedup.connected_components
+    pattern) — without it the plan doubles per iteration and Catalyst
+    analysis dominates past ~15 iterations. Each iteration runs two
+    driver actions (dangling sum, delta) plus feeds the next, so an
+    un-materialized iteration would re-execute its |edges|-sized
+    join+agg once per reader; materializing the |hosts|-sized frame
+    once is cheaper.
 
     Returns (host, rank) with raw double ranks (callers round; the
     convergence loop's iteration count is data-dependent, so a frozen
@@ -138,13 +136,12 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
     teleport = (1.0 - damping) / n
     deg = links.groupBy(src_col).agg(F.count("*").alias("outd"))
     edges = links.join(deg, src_col)
-    dangling_hosts = hosts.join(
-        deg, hosts["host"] == deg[src_col], "left_anti"
-    ).localCheckpoint()
-    ranks = hosts.select(
-        "host", F.lit(1.0 / n).alias("rank")
-    ).localCheckpoint()
-    for i in range(max_iters):
+    dangling_hosts = materialize(
+        hosts.join(deg, hosts["host"] == deg[src_col], "left_anti"),
+        "pagerank_converged dangling hosts", eager=True)
+    ranks = materialize(hosts.select("host", F.lit(1.0 / n).alias("rank")),
+                        "pagerank_converged ranks", eager=True)
+    for _ in range(max_iters):
         dangling = (
             ranks.join(dangling_hosts, "host")
             .agg(F.sum("rank").alias("s"))
@@ -155,7 +152,7 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
             .groupBy(F.col(dst_col).alias("host"))
             .agg(F.sum(F.col("rank") / F.col("outd")).alias("s"))
         )
-        stepped = (
+        stepped = materialize(
             hosts.join(contrib, "host", "left")
             .join(ranks.withColumnRenamed("rank", "old"), "host")
             .select(
@@ -166,10 +163,9 @@ def pagerank_converged(links: DataFrame, tol: float = 1e-9,
                     + damping * (F.coalesce(F.col("s"), F.lit(0.0))
                                  + F.lit(dangling / n))
                 ).alias("rank"),
-            )
+            ),
+            "pagerank_converged step", eager=True,
         )
-        if (i + 1) % checkpoint_every == 0:
-            stepped = stepped.localCheckpoint()
         delta = stepped.agg(
             F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d")
         ).first()["d"]
@@ -286,7 +282,7 @@ def hits(links: DataFrame, iters: int = 3,
     single-row normalization aggregates attached by crossJoin so the
     unrolled computation needs no per-iteration driver actions (the
     pagerank_converged contrast). The distinct edge list and the host
-    frame are localCheckpoint'ed before the loop (lazily — nothing
+    frame are checkpointed before the loop (lazily — nothing
     materializes until the caller's first action): each is referenced
     2*iters times in the unrolled plan, and without the cut every
     reference re-executes the upstream link derivation — 6+ rescans of
@@ -302,10 +298,10 @@ def hits(links: DataFrame, iters: int = 3,
         return links.sparkSession.createDataFrame(
             [], "host string, auth double, hub double"
         )
-    edges = links.select(
+    edges = materialize(links.select(
         F.col(src_col).alias("e_src"), F.col(dst_col).alias("e_dst")
-    ).distinct().localCheckpoint(eager=False)
-    hosts = hosts.localCheckpoint(eager=False)
+    ).distinct(), "hits edges")
+    hosts = materialize(hosts, "hits hosts")
 
     def _l1(scores: DataFrame, col: str) -> DataFrame:
         total = scores.agg(F.sum(col).alias("_t"))
@@ -335,7 +331,7 @@ def hits(links: DataFrame, iters: int = 3,
         # 1506 Exchange nodes at iters=3, and Catalyst analysis dominated
         # the query). The checkpointed frame is |hosts|-sized — the same
         # bound as the ranks frame pagerank_converged materializes.
-        auth = auth.localCheckpoint(eager=False)
+        auth = materialize(auth, "hits auth")
         h = (
             edges.join(auth, edges["e_dst"] == auth["host"])
             .groupBy(F.col("e_src").alias("host"))
@@ -347,7 +343,7 @@ def hits(links: DataFrame, iters: int = 3,
             ),
             "hub",
         )
-        hub = hub.localCheckpoint(eager=False)
+        hub = materialize(hub, "hits hub")
     return (
         auth.join(hub, "host")
         .select(
@@ -378,7 +374,7 @@ def trustrank(links: DataFrame, seeds: list[str], iters: int = 3,
     graph are ignored), and ranks initialize to the teleport vector.
     Driver state: the present-seed count, one scalar. The
     degree-annotated edge frame and the host frame are
-    localCheckpoint'ed (lazily) before the loop — each is referenced
+    checkpointed (lazily) before the loop — each is referenced
     once per unrolled iteration, and without the cut every reference
     re-executes the upstream link derivation (the hits /
     connected_components lesson). Ranks rounded 8 dp; rank mass is NOT
@@ -388,7 +384,7 @@ def trustrank(links: DataFrame, seeds: list[str], iters: int = 3,
     """
     if not seeds:
         raise ValueError("need at least one seed host")
-    hosts = _hosts(links, src_col, dst_col).localCheckpoint(eager=False)
+    hosts = materialize(_hosts(links, src_col, dst_col), "trustrank hosts")
     n_seeds = hosts.filter(F.col("host").isin(seeds)).count()
     if n_seeds == 0:  # no seed present in the graph: nothing is trusted
         return hosts.select("host", F.lit(0.0).alias("rank"))
@@ -415,7 +411,7 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 32,
 
     Per round, every pointer jumps to its pointer's pointer (hops add),
     so reachable-within-max_hops chains terminate in O(log max_hops)
-    rounds; each round's frame is localCheckpoint'ed (lazily) — the
+    rounds; each round's frame is checkpointed (lazily) — the
     self-join doubles the lineage per round, the same analyze-time
     blowup build_training_corpus documents. Multiple out-edges per src
     collapse to min(dst) first (deterministic; real redirect stores are
@@ -432,11 +428,11 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 32,
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    f = (
+    f = materialize(
         edges.groupBy(F.col(src_col).alias("node"))
         .agg(F.min(dst_col).alias("cur"))
-        .withColumn("hops", F.lit(1).cast("long"))
-        .localCheckpoint(eager=False)
+        .withColumn("hops", F.lit(1).cast("long")),
+        "resolve_redirects pointers",
     )
     rounds = max(1, (max_hops - 1).bit_length())  # 2^rounds >= max_hops
     for _ in range(rounds):
@@ -445,15 +441,15 @@ def resolve_redirects(edges: DataFrame, max_hops: int = 32,
             F.col("cur").alias("j_cur"),
             F.col("hops").alias("j_hops"),
         )
-        f = (
+        f = materialize(
             f.join(nxt, f["cur"] == nxt["j_node"], "left")
             .select(
                 "node",
                 F.coalesce("j_cur", "cur").alias("cur"),
                 (F.col("hops") + F.coalesce("j_hops", F.lit(0)))
                 .alias("hops"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "resolve_redirects round",
         )
     srcs = f.select(F.col("node").alias("s_node")).distinct()
     return (

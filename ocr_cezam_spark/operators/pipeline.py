@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..materialize import materialize
 from .dedup import paragraph_dedup
 from .textstats import _gopher_stats, _token_stats
 
@@ -47,9 +48,9 @@ def clean_corpus(docs: DataFrame, id_col: str = "doc_id",
     # re-analyzing) the whole paragraph-dedup subtree: Catalyst analysis
     # of the un-truncated composition measurably dominated construction
     # (guide sections 3.3 and 7.3).
-    c = cleaned.filter(F.col("text_dedup") != "").select(
+    c = materialize(cleaned.filter(F.col("text_dedup") != "").select(
         F.col(id_col), F.col("text_dedup").alias(text_col)
-    ).localCheckpoint(eager=False)
+    ), "clean_corpus non-empty docs")
     keepers = (
         c.select(F.col(id_col), F.md5(F.col(text_col)).alias("digest"))
         .groupBy("digest")
@@ -256,7 +257,7 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     products, no corpus-wide window — the only windows are per-shard /
     per-band; plan-asserted in tests/test_plans.py) and stages hand off
     by id equi-joins. The stage frontiers (cleaned corpus, kept docs,
-    span-cleaned survivors) are localCheckpoint'ed, for two reasons:
+    span-cleaned survivors) are checkpointed, for two reasons:
     the chain is action-heavy (CC fixpoint, band totals and DSIR model
     collects each launch jobs that would otherwise recompute paragraph
     dedup + minhash from the raw scan), and — the one that actually
@@ -264,7 +265,7 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     stage references its input several times (span dedup alone joins
     its source five ways), so the un-truncated tree multiplies stage
     over stage and Catalyst spends minutes ANALYZING, not executing.
-    persist() does not truncate lineage for planning; localCheckpoint
+    persist() does not truncate lineage for planning; a checkpoint
     does. At production these frontiers are exactly the intermediate
     tables a multi-day build writes to scratch storage anyway — same
     shape, same bound (the corpus itself, once per stage boundary).
@@ -280,10 +281,10 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
     # flag join; the caller's fixture subtree can itself be a deep plan,
     # and every un-truncated reference re-embeds it in each stage's
     # analysis. One lazy checkpoint up front bounds that (guide 3.3).
-    docs = docs.localCheckpoint(eager=False)
-    cleaned = clean_corpus(docs, id_col, text_col, max_freq,
-                           keep_text=True).select(id_col, text_col)
-    cleaned = cleaned.localCheckpoint(eager=False)
+    docs = materialize(docs, "build_training_corpus input")
+    cleaned = materialize(clean_corpus(docs, id_col, text_col, max_freq,
+                                       keep_text=True).select(id_col, text_col),
+                          "build_training_corpus cleaned")
     scored = _with_near_dup_component(cleaned, id_col, text_col).select(
         id_col, doc_quality(cleaned, text_col).alias("q"), "component"
     )
@@ -292,16 +293,15 @@ def build_training_corpus(docs: DataFrame, budget_tokens: int,
         scored.groupBy("component").agg(best.alias("best"))
         .select((-F.col("best.nid")).alias(id_col))
     )
-    kept = cleaned.join(kept_ids, id_col, "left_semi").localCheckpoint(
-        eager=False
-    )
+    kept = materialize(cleaned.join(kept_ids, id_col, "left_semi"),
+                       "build_training_corpus kept")
     line_ok = _gopher_line_stats(F.col(text_col))["passes"] == 1
-    survivors = (
+    survivors = materialize(
         substring_span_dedup(kept, id_col=id_col, text_col=text_col)
         .filter(F.col("clean_text") != "")
         .select(F.col(id_col), F.col("clean_text").alias(text_col))
-        .filter(line_ok)
-        .localCheckpoint(eager=False)
+        .filter(line_ok),
+        "build_training_corpus survivors",
     )
     flagged = survivors.join(
         docs.select(F.col(id_col), F.col(target_col)), id_col
@@ -528,7 +528,9 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
          — fragments, param order, case, default ports);
       2. within-batch recrawl collapse: one row per canonical url
          (max id wins, deterministic);
-      3. url matched + same content digest  -> 'skip_unchanged';
+      3. url matched + same content digest  -> 'skip_unchanged'
+         (a url held by several corpus rows matches one: a row with
+         the same digest, else the highest corpus id);
       4. url matched + digest differs       -> 'update';
       5. url novel + digest already served  -> 'skip_exact_dup'
          (exact-dedup-FIRST, the near_dup_pairs_dedup_first
@@ -547,7 +549,8 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
     ordered by id.
 
     Scale shape: canonicalization is codegen'd projection; the batch
-    is left-joined to the corpus url table, then the digest table; that
+    is left-joined to the corpus url table (its matches reduced to one
+    per url on the join's own partitioning), then the digest table; that
     frame (the only one read twice) feeds the near-dup candidates —
     the bounded incremental band join, never corpus x corpus — and,
     with the best near match left-joined on id, ONE projection whose
@@ -573,19 +576,24 @@ def ingest_delta(new_pages: DataFrame, corpus: DataFrame,
              .alias("b"))
         .select("url", "b.id", "b.text", "b.digest", "b.quality")
     )
-    corp = corpus.select(
+    corp = materialize(corpus.select(
         F.col(id_col).alias("corpus_id"),
         canonicalize_url(F.col(url_col)).alias("url"),
         F.md5(F.col(text_col)).alias("cdigest"),
-    ).localCheckpoint(eager=False)
+    ), "ingest_delta corpus")
     cdig = corp.groupBy(F.col("cdigest").alias("digest")).agg(
         F.min("corpus_id").alias("exact_id")
     )
+    # One url match per batch row (a canonical url can repeat in the
+    # corpus): a digest match wins, else the highest corpus id. best is
+    # one row per url, so the grouping reuses the join's partitioning.
+    matched = best.join(corp, "url", "left").groupBy("url").agg(F.max(F.struct(
+        (F.col("digest") == F.col("cdigest")).alias("same"), "corpus_id",
+        "cdigest", "id", "text", "digest", "quality")).alias("m"))
     # The one frame read twice (verdict projection + near-dup candidates)
-    joined = (
-        best.join(corp, "url", "left").join(cdig, "digest", "left")
-        .localCheckpoint(eager=False)
-    )
+    joined = materialize(
+        matched.select("url", "m.*").drop("same").join(cdig, "digest", "left"),
+        "ingest_delta joined")
     cands = joined.filter(
         F.col("corpus_id").isNull() & F.col("exact_id").isNull()
     )

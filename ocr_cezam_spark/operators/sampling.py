@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.materialize import materialize
 
 QUALITY_DP = 4  # quality is rounded before ordering so both engines sort alike
 
@@ -58,7 +59,7 @@ def token_budget_select(docs: DataFrame, budget: int,
     the edge band whose first doc may still land exactly on the budget.
 
     The narrow (id, n_tokens, quality, band) projection is lazily
-    localCheckpoint'ed before the band-totals pass: the totals collect
+    checkpointed (``materialize``) before the band-totals pass: the totals collect
     and the window pass would otherwise each re-read AND re-tokenize the
     full corpus (and re-run whatever plan produced ``docs``) —
     tokenization dominates, so the double scan doubled the operator's
@@ -79,7 +80,7 @@ def token_budget_select(docs: DataFrame, budget: int,
     cum_tokens is the inclusive running total in global order.
     """
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
-    base = docs.select(
+    base = materialize(docs.select(
         F.col(id_col),
         F.size(words).cast("long").alias("n_tokens"),
         doc_quality(docs, text_col).alias("quality"),
@@ -87,7 +88,7 @@ def token_budget_select(docs: DataFrame, budget: int,
         "band",
         F.least(F.floor(F.col("quality") * n_buckets).cast("int"),
                 F.lit(n_buckets - 1)),
-    ).localCheckpoint(eager=False)
+    ), "token_budget_select projection")
     per_band = {
         r["band"]: r["toks"]
         for r in base.groupBy("band").agg(F.sum("n_tokens").alias("toks"))

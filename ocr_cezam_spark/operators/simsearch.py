@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 from ocr_cezam_spark.functions.numeric import round_he
+from ocr_cezam_spark.materialize import materialize
 from ocr_cezam_spark.operators.dedup import shared_key_pairs
 
 
@@ -392,11 +393,11 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.99,
     # norms computed once per VECTOR (not once per candidate pair): the
     # pair stage then does exactly one dot product per pair. The prepped
     # frame feeds FOUR plan references (bucket left/right, vector attach
-    # a-side/b-side) — a lazy localCheckpoint computes the projection
+    # a-side/b-side) — a lazy checkpoint computes the projection
     # once instead of once per reference (guide section 3.3).
-    prepped = base.withColumn(
+    prepped = materialize(base.withColumn(
         "_vv", _dot(F.col("va"), F.col("va"))
-    ).localCheckpoint(eager=False)
+    ), "embedding_near_dup_pairs vectors")
     probes = probe_cents(F.col("va"), cents, F.col("_vv"), nprobe)
     # candidate generation on (id, centroid_id) ONLY — the multi-probe
     # explode duplicates pairs up to nprobe^2 times, so dedup the id pairs
@@ -583,15 +584,15 @@ def ivf_topk(emb: DataFrame, probe_ids: list[int], k: int = 3,
     if len(cents) > IVF_LITERAL_MAX_K:
         return ivf_topk_join(emb, probe_ids, k, n_centroids, id_col,
                              vec_col, nprobe, cents)
-    base = (
+    # referenced by both the probe filter and the candidate join:
+    # compute the K-centroid assignment once (guide section 3.3)
+    base = materialize(
         emb.select(
             F.col(id_col).alias("nb_id"), _to_double(F.col(vec_col)).alias("v")
         )
         .withColumn("_vv", _dot(F.col("v"), F.col("v")))
-        .withColumn("centroid_id", _nearest(F.col("v"), cents, F.col("_vv"))["cid"])
-        # referenced by both the probe filter and the candidate join:
-        # compute the K-centroid assignment once (guide section 3.3)
-        .localCheckpoint(eager=False)
+        .withColumn("centroid_id", _nearest(F.col("v"), cents, F.col("_vv"))["cid"]),
+        "ivf_topk assignment",
     )
     probes_expr = probe_cents(F.col("v"), cents, F.col("_vv"), nprobe)
     probes = base.filter(F.col("nb_id").isin(probe_ids)).select(
@@ -673,14 +674,14 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
     # The assignment frame is referenced THREE times (pair-join left,
     # pair-join right/broadcast, final output join). Un-truncated, each
     # reference re-runs the K-centroid argmin projection over the corpus
-    # — a lazy localCheckpoint computes it once (guide section 3.3:
+    # — a lazy checkpoint computes it once (guide section 3.3:
     # materialize a multiply-referenced intermediate). At production the
     # cluster assignment is exactly the table a SemDeDup run persists
     # between the assign and dedup phases.
-    assigned = base.select(
+    assigned = materialize(base.select(
         "vid", "v", F.sqrt(F.col("_vv")).alias("norm"),
         best["cid"].alias("centroid_id"),
-    ).localCheckpoint(eager=False)
+    ), "semantic_dedup assignment")
     right = assigned.select(
         F.col("vid").alias("b"), F.col("v").alias("vb"),
         F.col("norm").alias("nb"), "centroid_id",

@@ -328,13 +328,20 @@ def test_ingest_delta_verdicts_and_batch_collapse(spark):
     """Every verdict class on a hand fixture, plus the within-batch
     recrawl collapse (two batch rows on one canonical url keep max id)
     and the verdict precedence: exact before near, and url / exact /
-    near matches all before the quality gate."""
+    near matches all before the quality gate. A canonical url held by
+    two corpus rows still gives one verdict: the same-digest row wins,
+    else the highest corpus id."""
     corpus = spark.createDataFrame(
         [
             (1, "https://a.ex/p1", "alpha beta gamma delta"),
             (2, "https://a.ex/p2", "one two three four"),
             (3, "https://a.ex/p3", "plain words about the weather today"),
             (4, "https://a.ex/p4", "m m m m m m m m m m m w"),  # low quality
+            # two corpus copies of one canonical url each
+            (5, "https://b.ex/p1#a", "sigma tau upsilon phi chi psi"),
+            (6, "https://b.ex/p1#b", "quartz violet harbor lantern"),
+            (7, "https://c.ex/p#a", "granite meadow copper river"),
+            (8, "https://c.ex/p#b", "saffron glacier thunder orchid"),
         ],
         "doc_id long, url string, text string",
     )
@@ -361,12 +368,19 @@ def test_ingest_delta_verdicts_and_batch_collapse(spark):
             (18, "https://a.ex/u", "m m m m m m m m m m m w"),
             # novel url, low-quality near clone of doc 4 -> near dup
             (19, "https://a.ex/v", "m m m m m m m m m m m m w"),
+            # url held twice in the corpus, text of the LOWER id copy ->
+            # skip_unchanged against that copy, not also update
+            (20, "https://b.ex/p1", "sigma tau upsilon phi chi psi"),
+            # url held twice, new text -> one update, highest corpus id
+            (21, "https://c.ex/p", "pebble lagoon falcon ember"),
         ],
         "doc_id long, url string, text string",
     )
     from ocr_cezam_spark.operators.pipeline import ingest_delta
 
-    got = {r["id"]: r for r in ingest_delta(batch, corpus).collect()}
+    rows = ingest_delta(batch, corpus).collect()
+    assert len(rows) == len({r["id"] for r in rows})  # one verdict per row
+    got = {r["id"]: r for r in rows}
     assert 10 not in got  # collapsed away by the max-id rule
     assert got[11]["verdict"] == "skip_unchanged"
     assert got[11]["corpus_id"] == 1
@@ -383,6 +397,9 @@ def test_ingest_delta_verdicts_and_batch_collapse(spark):
     assert got[18]["corpus_id"] == 4
     assert got[19]["verdict"] == "skip_near_dup"
     assert got[19]["corpus_id"] == 4 and got[19]["sim_est"] >= 0.5
+    assert got[20]["verdict"] == "skip_unchanged"
+    assert got[20]["corpus_id"] == 5
+    assert got[21]["verdict"] == "update" and got[21]["corpus_id"] == 8
 
 
 def test_hdr_length_gate_trims_both_tails(spark):

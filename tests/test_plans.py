@@ -144,14 +144,14 @@ def test_ngram_builders_split_once(spark, monkeypatch):
     inside a lambda body, where it would re-split the text per n-gram
     position (O(words^2) per document). Checked on the optimized plan,
     after CollapseProject could have inlined a projected split back into
-    the lambda. Checkpoints are made no-ops so the plans keep the
-    expressions a lazy checkpoint would hide."""
+    the lambda. The builders' checkpoints (all in dedup) are made no-ops
+    so the plans keep the expressions a lazy checkpoint would hide."""
     from ocr_cezam_spark.operators import dedup, scrub, textstats
 
     docs = spark.createDataFrame([(1, "a b c d e f g h i j")],
                                  "doc_id long, text string")
-    monkeypatch.setattr(type(docs), "localCheckpoint",
-                        lambda self, eager=True: self)
+    monkeypatch.setattr(dedup, "materialize",
+                        lambda df, reason, eager=False: df)
     builders = {
         "shingles": docs.select(dedup.shingles("text")),
         "substring_span_dedup": dedup.substring_span_dedup(docs),
